@@ -877,6 +877,35 @@ def test_gemm_kernels_row_blocked_match_single_gemm():
     assert 0 < int(da.sum()) < n  # some dropped, some kept
 
 
+def test_gemm_bucket_topk_empty_src():
+    """A bucket with no probe rows yields three empty arrays, not a
+    np.concatenate([]) error."""
+    import numpy as np
+
+    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
+        _gemm_bucket_topk,
+    )
+
+    nbr = np.arange(3, dtype="int64")
+    src, sel, sims = _gemm_bucket_topk(
+        np.empty(0, dtype="int64"), np.empty((0, 4)), nbr, np.ones((3, 4)), 5, 10**6
+    )
+    assert (len(src), len(sel), len(sims)) == (0, 0, 0)
+    assert src.dtype == sel.dtype == np.int64 and sims.dtype == np.float64
+
+
+def test_gemm_block_pairs_empty_block():
+    """A block with no rows yields three empty arrays, not a
+    np.concatenate([]) error."""
+    import numpy as np
+
+    from unified_log_aggregation_and_analytics_spark.operators.dedup import _gemm_block_pairs
+
+    lo, hi, sims = _gemm_block_pairs(np.empty(0, dtype="int64"), np.empty((0, 4)), 0.5, 10**6)
+    assert (len(lo), len(hi), len(sims)) == (0, 0, 0)
+    assert lo.dtype == hi.dtype == np.int64 and sims.dtype == np.float64
+
+
 def test_knn_join_default_margin_recall_floor(spark, emb):
     """The DEFAULT code path (margin-2 multiprobe since r8) holds its
     own recall floor vs the exact graph: constant 3x replication

@@ -400,10 +400,13 @@ def _gemm_block_pairs(ids, m, threshold, block_cells):
     ``block_cells`` float64 cells (guide §5: bounded worker memory on
     a degenerate hot block — O(rows x block), never O(block^2)); a
     block under one row-block takes the identical single-GEMM path.
-    Returns (id_lo, id_hi, cos_sim) arrays."""
+    Returns (id_lo, id_hi, cos_sim) arrays, empty when there are no
+    rows."""
     import numpy as np
 
     n = len(ids)
+    if n == 0:
+        return ids[:0], ids[:0], np.empty(0, dtype=np.float64)
     step = max(1, int(block_cells) // max(1, n))
     los, his, sims_out = [], [], []
     for s in range(0, n, step):

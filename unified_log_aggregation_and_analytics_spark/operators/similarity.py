@@ -46,7 +46,10 @@ def _gemm_bucket_topk(src_all, v1_all, nbr, v2, k, block_cells):
     scored matrix never exceeds ``block_cells`` float64 cells — each
     src row's top-k is row-local, so blocking is exactly lossless, and
     a bucket under one block takes the identical single-GEMM path.
-    Returns (src_repeated, nbr_selected, cos_sim) arrays."""
+    Returns (src_repeated, nbr_selected, cos_sim) arrays, empty when
+    there is no src row."""
+    if len(src_all) == 0:
+        return src_all[:0], nbr[:0], np.empty(0, dtype=np.float64)
     # nbr-ascending columns make the stable argsort's tie order the
     # window's (cos_sim DESC, nbr ASC) — do not reorder.
     order = np.argsort(nbr, kind="stable")
@@ -58,7 +61,9 @@ def _gemm_bucket_topk(src_all, v1_all, nbr, v2, k, block_cells):
         src = src_all[s : s + block]
         v1 = v1_all[s : s + block]
         n1 = np.linalg.norm(v1, axis=1)
-        sims = np.round((v1 @ v2.T) / np.outer(n1, n2), 6)
+        # a zero-norm row divides 0/0 into NaN on purpose (keyed below)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = np.round((v1 @ v2.T) / np.outer(n1, n2), 6)
         key = np.where(np.isnan(sims), -np.inf, -sims)
         # k+1 covers the single possible self-pair (src is a member
         # of at most one of its probe buckets: its home bucket).

@@ -26,9 +26,10 @@ def get_spark(
     - UTC session timezone: log timestamps are event-time; a cluster
       must not depend on host-local time.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n_cpu = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(n_cpu))
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else n_cpu
     # Shuffle/broadcast spill files must NOT live in /tmp here: an
     # external tmp cleaner races Spark's block manager (observed
     # vanishing part-files + "Error deleting temp_shuffle" + 5-10x

@@ -7,11 +7,34 @@ partition pruning on ``log_date``. S7 is the driver-testdata contract.
 Scale note: ``spark.read.parquet`` + declarative select/filter is all
 that's needed — Catalyst pushes predicates and prunes columns down to
 the scan, which is exactly the shard-local filtering OpenSearch does.
+
+Metadata cache (``cached`` / ``file_stamp``): driver-side metadata that
+every query would otherwise re-derive — a table's inferred parquet
+schema here, an ANN index's frozen artifacts and base-table read in
+``operators/ann_index.py`` — is memoized once per process.
+
+- Key: (Spark application id, caller key naming the path). A new
+  SparkSession application never sees an entry of an earlier one.
+- Stamp: a value read from the file system before every lookup; a hit
+  requires the stored stamp to equal it, and a miss replaces the
+  entry, so there is one entry per live key. ``load_table`` stamps the
+  table file's (size, mtime_ns, inode); the index artifacts stamp the
+  index manifest, which every build, append, compact and merge
+  rewrites.
+- Invalidation: rewriting, replacing or deleting the stamped file
+  changes or removes its stamp, so the next lookup reloads. A missing
+  file has no stamp and is never cached. For a directory the stamp is
+  the directory's own, which changes when entries are added or
+  removed, not when a file inside is rewritten in place.
+- Values: ``load_table`` caches only the schema and still returns a
+  fresh ``spark.read.schema(s).parquet(path)`` DataFrame per call, so
+  two loads of one table join as distinct relations.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,6 +42,35 @@ from pyspark.sql import functions as F
 from unified_log_aggregation_and_analytics_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# (application id, key) -> (stamp, value); see the module docstring.
+_CACHE: dict[tuple[str, Hashable], tuple[Hashable, Any]] = {}
+
+
+def file_stamp(path: str) -> tuple[int, int, int] | None:
+    """(size, mtime_ns, inode) of ``path``, or None when it does not
+    exist."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return (st.st_size, st.st_mtime_ns, st.st_ino)
+
+
+def cached(spark: SparkSession, key: Hashable, stamp: Hashable | None, load: Callable[[], Any]) -> Any:
+    """``load()``, memoized per (Spark application, ``key``) while
+    ``stamp`` is unchanged; a None stamp bypasses the cache. Callers
+    must not mutate the returned value. Two threads that miss together
+    both load; either result may stay cached, as both are equivalent."""
+    if stamp is None:
+        return load()
+    slot = (spark.sparkContext.applicationId, key)
+    hit = _CACHE.get(slot)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = load()
+    _CACHE[slot] = (stamp, value)
+    return value
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -28,14 +80,17 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     refuses to read natively; it is read via nanosAsLong and converted
     to TimestampType with exact integer division (``div`` — plain ``/``
     would round-trip through double and lose precision above 2^53 ns).
-    """
-    from pyspark.sql import functions as F
 
+    The inferred schema is cached per file (module docstring), so only
+    the first load of a table file runs parquet schema inference.
+    """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The DuckDB oracle is timezone-naive; pin the session to UTC so
     # date_trunc/day bucketing agrees regardless of host timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = cached(spark, ("schema", path), file_stamp(path), lambda: spark.read.parquet(path).schema)
+    df = spark.read.schema(schema).parquet(path)
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

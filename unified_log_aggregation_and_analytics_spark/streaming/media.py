@@ -144,8 +144,8 @@ def media_ingest_batch(
     2. exact dedup: xxhash64(payload) — keep-min within the batch,
        anti-join the fp sidecar across batches (every modality);
     3. near-dup: banded 64-bit fingerprints (image dHash / audio
-       spectral) — within-batch pairs via hamming_near_dup per
-       modality (keep-min), cross-batch vs the modality-qualified
+       spectral) — within-batch pairs via one hamming_near_dup
+       keyed on modality (keep-min), cross-batch vs the modality-qualified
        band + hash sidecars; rejects carry ``_error='near_duplicate'``;
     4. survivors append to ``table_path`` partitioned by modality;
        fingerprints/hashes/bands append to the sidecars; with
@@ -210,23 +210,19 @@ def media_ingest_batch(
             kept = kept.join(seen, ["fp_bucket", "fp"], "left_anti")
         pre_nd = kept
         pre_nd.persist()
-        # within-batch perceptual pairs PER MODALITY (the hash
-        # families are incompatible; a bounded two-entry loop, never
-        # data-dependent)
-        within_frames = [
-            hamming_near_dup(
-                pre_nd.filter(
-                    (F.col("modality") == mod) & F.col("dhash").isNotNull()
-                ).select("media_id", "dhash"),
-                "dhash",
-                max_hamming=max_hamming,
-                bands=HASH_BANDS,
-            ).select(F.col("id_b").alias("media_id"))
-            for mod in PERCEPTUAL_MODALITIES
-        ]
-        within = within_frames[0]
-        for f_ in within_frames[1:]:
-            within = within.union(f_)
+        # within-batch perceptual pairs: ONE banded join for every
+        # modality — modality rides in the equi-join key, so a pair
+        # never crosses hash families (the batch report's form,
+        # multimodal.media_ingest_report)
+        within = hamming_near_dup(
+            pre_nd.filter(
+                F.col("modality").isin(*PERCEPTUAL_MODALITIES) & F.col("dhash").isNotNull()
+            ).select("media_id", "modality", "dhash"),
+            "dhash",
+            max_hamming=max_hamming,
+            bands=HASH_BANDS,
+            key_cols=("modality",),
+        ).select(F.col("id_b").alias("media_id"))
         cross = _cross_batch_near_ids(
             spark,
             pre_nd.filter(F.col("dhash").isNotNull()),
