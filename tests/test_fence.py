@@ -397,3 +397,77 @@ def test_fenced_read_as_of_snapshot(spark, tmp_path):
     with pytest.raises(ValueError, match="compaction horizon"):
         seen(1)
     assert seen(3) == {b * 100 + v for b in range(4) for v in (1, 2)}
+
+
+def _names(root):
+    return sorted(p.name for p in Path(root).iterdir() if not p.name.startswith("."))
+
+
+def test_fenced_batch_exception_writes_no_marker_no_metrics(spark, tmp_path):
+    """An exception inside a FencedBatch leaves the batch uncommitted:
+    its data write stays invisible, no marker and no metrics row land,
+    and every frame it registered is unpersisted."""
+    path = str(tmp_path / "t")
+    root = str(tmp_path / "t_commits")
+    metrics = str(tmp_path / "t_metrics")
+    df = spark.createDataFrame([(1,), (2,)], "v long")
+    fb = fence.FencedBatch(spark, root, 0, metrics)
+    try:
+        with fb:
+            kept = fb.persist(fb.observe(df, F.count(F.lit(1)).alias("n")))
+            fb.outcomes = lambda m: [("ingested", m["n"])]
+            fb.append(kept, path)
+            assert kept.is_cached
+            raise RuntimeError("kill inside the batch")
+    except RuntimeError:
+        pass
+    assert not kept.is_cached
+    assert not fence.is_committed(spark, root, 0)
+    assert not Path(metrics).exists()
+    assert _visible(spark, path, root) == set()
+
+    # the replay commits: metrics rows first, then the marker
+    with fence.FencedBatch(spark, root, 0, metrics) as fb:
+        assert not fb.committed
+        fb.append(fb.observe(df, F.count(F.lit(1)).alias("n")), path)
+        fb.outcomes = lambda m: [("ingested", m["n"])]
+    assert _visible(spark, path, root) == {1, 2}
+    rows = [tuple(r) for r in fence.fenced_read(spark, metrics, root).collect()]
+    assert rows == [(0, "ingested", 2)]
+
+
+def test_fenced_batch_committed_id_writes_nothing(spark, tmp_path):
+    """A stream id whose marker exists reports ``.committed``; leaving
+    the block without writing adds no metrics row and no marker."""
+    root = str(tmp_path / "t_commits")
+    metrics = str(tmp_path / "t_metrics")
+    fence.mark_committed(spark, root, 4)
+    with fence.FencedBatch(spark, root, 4, metrics) as fb:
+        assert fb.committed and fb.bid == 4
+    assert not Path(metrics).exists()
+    assert _names(root) == ["4"]
+    fence.rollup_markers(spark, root)  # no-op: 0..3 never committed
+    assert fence.FencedBatch(spark, root, 4, metrics).committed
+    assert not fence.FencedBatch(spark, root, 5, metrics).committed
+
+
+def test_fenced_batch_manual_mode_after_rollup(spark, tmp_path):
+    """Manual mode (``batch_id=None``) takes the next free committed
+    slot — also when the committed prefix lives only in an
+    ``_upto_<k>`` rollup — observes nothing and writes no metrics."""
+    path = str(tmp_path / "t")
+    root = str(tmp_path / "t_commits")
+    metrics = str(tmp_path / "t_metrics")
+    for bid in range(3):
+        _write(spark, path, bid, [1])
+        fence.mark_committed(spark, root, bid)
+    assert fence.rollup_markers(spark, root) == 2
+    assert _names(root) == ["_upto_2"]
+    df = spark.createDataFrame([(7,)], "v long")
+    with fence.FencedBatch(spark, root, None, metrics) as fb:
+        assert fb.bid == 3 and not fb.committed
+        assert fb.observe(df, F.count(F.lit(1)).alias("n")) is df
+        fb.append(df, path)
+    assert fence.committed_batches(spark, root) == [0, 1, 2, 3]
+    assert _visible(spark, path, root) == {1, 101, 201, 7}
+    assert not Path(metrics).exists()

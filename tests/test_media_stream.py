@@ -137,6 +137,42 @@ def test_media_sidecar_compaction_preserves_dedup(spark, tmp_path):
     assert 200 not in ingested and 201 not in ingested
 
 
+
+def test_media_compaction_rolls_up_markers(spark, tmp_path):
+    """compact_media_sidecars rolls up the commit markers as its corpus
+    and semantic twins do: after two batches the marker root holds
+    only ``_upto_1``, and a replay of batch 1 is still a no-op."""
+    from pathlib import Path
+
+    from unified_log_aggregation_and_analytics_spark.streaming import fence
+
+    table = str(tmp_path / "media_table")
+    rej = str(tmp_path / "media_rejected")
+    root = fence.fence_root(table)
+    b0 = _media_rows(
+        spark, [(g * 4 + m, _ppm_payload(g + 10, m)) for g in range(2) for m in range(2)]
+    )
+    b1 = _media_rows(spark, [(100, _ppm_payload(30, 0)), (101, _ppm_payload(10, 0))])
+    SM.media_ingest_batch(b0, table, rej, batch_id=0)
+    SM.media_ingest_batch(b1, table, rej, batch_id=1)
+
+    def state():
+        return tuple(
+            sorted(tuple(r) for r in fence.fenced_read(spark, p, root).collect())
+            for p in (table + "_metrics", table + "_payload_fps")
+        ) + (sorted(r.media_id for r in fence.fenced_read(spark, table, root).collect()),)
+
+    before = state()
+    assert 100 in before[2] and 101 not in before[2]
+    SM.compact_media_sidecars(spark, table)
+    names = sorted(p.name for p in Path(root).iterdir() if not p.name.startswith("."))
+    assert names == ["_upto_1"], names
+    assert state() == before
+    SM.media_ingest_batch(b1, table, rej, batch_id=1)  # replay: no-op
+    assert state() == before
+    assert sorted(p.name for p in Path(root).iterdir() if not p.name.startswith(".")) == names
+
+
 def _wav_payload(seed: int, n: int = 256) -> bytes:
     import numpy as np
 

@@ -857,3 +857,47 @@ def test_ivfpq_delta_merge_probe_identical(spark, tmp_path):
     assert {r.vec_id for r in A.ivfpq_probe(
         spark, path, qvec, k=70, n_probe=4
     ).collect()} == set(range(70))
+
+
+def test_vector_metrics_cost_one_extra_job(spark, tmp_path):
+    """Vector-sink twin of test_corpus_metrics_cost_one_extra_job: the
+    outcome counts ride the reject write as observe() aggregates, so a
+    stream ``batch_id`` costs exactly ONE extra Spark job — the
+    metrics append — and a manual call (``batch_id=None``) writes no
+    metrics at all. ``kept.count()`` runs in both modes: it guards the
+    index append."""
+    from unified_log_aggregation_and_analytics_spark.streaming import fence
+    from unified_log_aggregation_and_analytics_spark.streaming.vectors import (
+        vector_ingest_batch,
+    )
+
+    vecs = _vecs(40, seed=41)
+    rows = [(i, vecs[i]) for i in range(10, 40)]
+    rows += [(15, vecs[16]), (999, [1.0, 2.0])]  # a duplicate id, a bad width
+    bdf = spark.createDataFrame(rows, VEC_SCHEMA).localCheckpoint()
+    base = spark.createDataFrame([(i, vecs[i]) for i in range(10)], VEC_SCHEMA)
+    for run in ("plain", "metered"):
+        build_ivf_index(base, str(tmp_path / f"ivf_{run}"), n_centroids=4)
+    tracker = spark.sparkContext.statusTracker()
+    spark.range(1).count()  # seed: guarantee a known job id exists
+
+    def jobs(run: str, batch_id):
+        before = max(tracker.getJobIdsForGroup(None))
+        vector_ingest_batch(
+            bdf, str(tmp_path / f"ivf_{run}"), str(tmp_path / f"rej_{run}"),
+            batch_id=batch_id,
+        )
+        return max(tracker.getJobIdsForGroup(None)) - before
+
+    plain = jobs("plain", None)
+    metered = jobs("metered", 0)
+    assert metered == plain + 1, (
+        f"metrics must add exactly the metrics-append job: "
+        f"{plain} jobs manual vs {metered} with batch_id"
+    )
+    assert not Path(str(tmp_path / "ivf_plain") + "_metrics").exists()
+    index = str(tmp_path / "ivf_metered")
+    m = fence.fenced_read(spark, f"{index}_metrics", fence.fence_root(index))
+    assert {r.outcome: r.n for r in m.collect()} == {
+        "ingested": 30, "duplicate": 1, "rejected:bad_dimension": 1,
+    }

@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -31,7 +32,7 @@ from unified_log_aggregation_and_analytics_spark.session import get_spark
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.scaledata/sf1")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".scaledata", "sf1"))
     ap.add_argument("--steps", type=int, default=24)
     ap.add_argument("--width", type=int, default=4)
     args = ap.parse_args()

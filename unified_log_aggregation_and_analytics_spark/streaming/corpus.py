@@ -49,13 +49,15 @@ the two paths.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unified_log_aggregation_and_analytics_spark.operators.text import quality_filter
 from unified_log_aggregation_and_analytics_spark.streaming import fence
+from unified_log_aggregation_and_analytics_spark.streaming.pipeline import (
+    PipelineResult,
+    start_sink,
+)
 
 N_FP_BUCKETS = 64
 
@@ -95,14 +97,15 @@ def doc_fingerprint(text_col: str = "text") -> F.Column:
 
 
 def _near_dup_ids(
-    spark: SparkSession,
+    fb: fence.FencedBatch,
     kept: DataFrame,
     table_path: str,
     jaccard_threshold: float,
 ) -> tuple[DataFrame, DataFrame]:
     """Streaming MinHash near-dup stage: returns (near_ids, sigs) —
     the batch's near-duplicate doc_ids (vs already-ingested docs AND
-    within this batch) and every batch doc's signature row.
+    within this batch) and every batch doc's signature row (persisted
+    for the life of ``fb``).
 
     Scale design mirrors the fingerprint sidecar: the BAND sidecar
     holds ``(band_idx, band_hash, doc_id)``, the SIG sidecar
@@ -118,11 +121,11 @@ def _near_dup_ids(
         minhash_signature,
     )
 
+    spark = fb.spark
     K = ND_NUM_HASHES
-    sigs = minhash_signature(
-        kept.select("doc_id", "text"), num_hashes=K, hash_fn="xxhash64"
+    sigs = fb.persist(
+        minhash_signature(kept.select("doc_id", "text"), num_hashes=K, hash_fn="xxhash64")
     )
-    sigs.persist()
     mh = [f"mh{k}" for k in range(1, K + 1)]
     omh = [f"omh{k}" for k in range(1, K + 1)]
     # COMMITTED sidecar rows only (fence.py): a torn predecessor's
@@ -276,95 +279,92 @@ def corpus_ingest_batch(
     count jobs per trigger — the round-5 verdict item); the batch's
     completion marker is the fence commit written after the metrics
     (streaming/fence.py)."""
-    from pyspark.sql import Observation
-
     from unified_log_aggregation_and_analytics_spark.operators.text import (
         QF_REJECT_VERDICTS,
     )
 
     spark = batch_df.sparkSession
-    scored = batch_df.join(
-        quality_filter(batch_df).select("doc_id", "verdict", "kept"), "doc_id"
-    )
-    reject_verdicts = tuple(QF_REJECT_VERDICTS)
-    if lm_model_path is not None:
-        from unified_log_aggregation_and_analytics_spark.operators.text import (
-            bigram_lm_score_indexed,
-        )
-
-        # score ONLY docs the quality rules kept: a rejected doc's
-        # verdict can never change, so paying the bigram plan for it
-        # is pure waste on the per-trigger hot path
-        lm = bigram_lm_score_indexed(
-            spark,
-            scored.filter(F.col("kept")).select("doc_id", "text"),
-            lm_model_path,
-        ).select("doc_id", "avg_nll")
-        fluent = F.coalesce(F.col("avg_nll") <= F.lit(max_avg_nll), F.lit(True))
-        scored = (
-            scored.join(lm, "doc_id", "left")
-            .withColumn(
-                "verdict",
-                F.when(F.col("kept") & ~fluent, F.lit("low_fluency")).otherwise(
-                    F.col("verdict")
-                ),
-            )
-            .withColumn("kept", F.col("kept") & fluent)
-            .drop("avg_nll")
-        )
-        reject_verdicts = reject_verdicts + ("low_fluency",)
-    scored = scored.withColumn("fp", doc_fingerprint()).withColumn(
-        "fp_bucket", F.pmod(F.col("fp"), F.lit(N_FP_BUCKETS))
-    )
-    # Batch-size + per-verdict reject counts ride the FIRST action over
-    # `scored` (the reject write below) as observed metrics; the
-    # verdict set is closed (QF_REJECT_VERDICTS), so per-rule counts
-    # are conditional sums, not a groupBy job.
     root = fence.fence_root(table_path)
-    if batch_id is None:
-        # manual/batch invocation: next free committed slot, so
-        # successive calls never clobber each other's partitions.
-        # CONTRACT: manual mode shares the stream's batch-id space —
-        # offline/bootstrap use only; against a LIVE checkpointed
-        # stream it would claim the stream's next id and that trigger
-        # would short-circuit as a replay (one dropped micro-batch)
-        done = fence.committed_batches(spark, root)
-        bid = (done[-1] + 1) if done else 0
-    else:
-        bid = int(batch_id)
-        if fence.is_committed(spark, root, bid):
+    with fence.FencedBatch(spark, root, batch_id, f"{table_path}_metrics") as fb:
+        if fb.committed:
             return  # replay of a fully-committed batch: exact no-op
-    # Replay-of-a-torn-attempt detection, captured BEFORE this
-    # attempt's own table append creates the partition: the write
-    # order puts the token-index append strictly after the table
-    # append, so a prior attempt can only have touched the token
-    # index if it got far enough to leave the table's batch partition
-    # behind. Drives the doc-granular idempotency guard below.
-    torn_retry = fence.path_exists(
-        spark, f"{table_path}/{fence.BATCH_COL}={bid}"
-    )
-
-    in_obs = Observation() if batch_id is not None else None
-    if in_obs is not None:
-        scored = scored.observe(
-            in_obs,
-            F.count(F.lit(1)).alias("n_in"),
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col("verdict") == v, F.lit(1))), F.lit(0)
-                ).cast("long").alias(f"rej_{v}")
-                for v in reject_verdicts
-            ],
+        scored = batch_df.join(
+            quality_filter(batch_df).select("doc_id", "verdict", "kept"), "doc_id"
         )
-    scored.persist()
-    try:
-        fence.fenced_append(
+        reject_verdicts = tuple(QF_REJECT_VERDICTS)
+        if lm_model_path is not None:
+            from unified_log_aggregation_and_analytics_spark.operators.text import (
+                bigram_lm_score_indexed,
+            )
+
+            # score ONLY docs the quality rules kept: a rejected doc's
+            # verdict can never change, so paying the bigram plan for it
+            # is pure waste on the per-trigger hot path
+            lm = bigram_lm_score_indexed(
+                spark,
+                scored.filter(F.col("kept")).select("doc_id", "text"),
+                lm_model_path,
+            ).select("doc_id", "avg_nll")
+            fluent = F.coalesce(F.col("avg_nll") <= F.lit(max_avg_nll), F.lit(True))
+            scored = (
+                scored.join(lm, "doc_id", "left")
+                .withColumn(
+                    "verdict",
+                    F.when(F.col("kept") & ~fluent, F.lit("low_fluency")).otherwise(
+                        F.col("verdict")
+                    ),
+                )
+                .withColumn("kept", F.col("kept") & fluent)
+                .drop("avg_nll")
+            )
+            reject_verdicts = reject_verdicts + ("low_fluency",)
+        scored = scored.withColumn("fp", doc_fingerprint()).withColumn(
+            "fp_bucket", F.pmod(F.col("fp"), F.lit(N_FP_BUCKETS))
+        )
+        # Replay-of-a-torn-attempt detection, captured BEFORE this
+        # attempt's own table append creates the partition: the write
+        # order puts the token-index append strictly after the table
+        # append, so a prior attempt can only have touched the token
+        # index if it got far enough to leave the table's batch partition
+        # behind. Drives the doc-granular idempotency guard below.
+        torn_retry = fence.path_exists(
+            spark, f"{table_path}/{fence.BATCH_COL}={fb.bid}"
+        )
+        # Batch-size + per-verdict reject counts ride the FIRST action
+        # over `scored` (the reject write below) as observed metrics; the
+        # verdict set is closed (QF_REJECT_VERDICTS), so per-rule counts
+        # are conditional sums, not a groupBy job.
+        scored = fb.persist(
+            fb.observe(
+                scored,
+                F.count(F.lit(1)).alias("n_in"),
+                *[
+                    F.coalesce(
+                        F.sum(F.when(F.col("verdict") == v, F.lit(1))), F.lit(0)
+                    ).cast("long").alias(f"rej_{v}")
+                    for v in reject_verdicts
+                ],
+            )
+        )
+
+        def outcomes(m: dict) -> list[tuple[str, int]]:
+            rej = {v: m[f"rej_{v}"] for v in reject_verdicts if m[f"rej_{v}"]}
+            n_near = m.get("n_near", 0)
+            n_dup = m["n_in"] - sum(rej.values()) - n_near - m["n_ing"]
+            return (
+                [("ingested", m["n_ing"])]
+                + ([("near_duplicate", n_near)] if near_dup else [])
+                + [("duplicate", n_dup)]
+                + [(f"rejected:{v}", n) for v, n in sorted(rej.items())]
+            )
+
+        fb.outcomes = outcomes
+        fb.append(
             scored.filter(~F.col("kept"))
             .drop("kept", "fp", "fp_bucket")
             .withColumnRenamed("verdict", "_error"),
             rejected_path,
-            bid,
-            ("_error",),
+            "_error",
         )
         kept = scored.filter(F.col("kept")).drop("kept", "verdict")
         # within-batch dedup: min doc_id per fingerprint, one shuffle on
@@ -388,25 +388,19 @@ def corpus_ingest_batch(
         seen = fence.fenced_read(spark, sidecar, root)
         if seen is not None:
             kept = kept.join(seen, ["fp_bucket", "fp"], "left_anti")
-        sigs = None
-        pre_nd = None
-        near_obs = None
         if near_dup:
-            pre_nd = kept
-            pre_nd.persist()
-            near_ids, sigs = _near_dup_ids(spark, kept, table_path, jaccard_threshold)
-            near_rejects = (
-                kept.join(near_ids, "doc_id")
-                .drop("fp", "fp_bucket")
-                .withColumn("_error", F.lit("near_duplicate"))
+            fb.persist(kept)
+            near_ids, sigs = _near_dup_ids(fb, kept, table_path, jaccard_threshold)
+            fb.append(
+                fb.observe(
+                    kept.join(near_ids, "doc_id")
+                    .drop("fp", "fp_bucket")
+                    .withColumn("_error", F.lit("near_duplicate")),
+                    F.count(F.lit(1)).alias("n_near"),
+                ),
+                rejected_path,
+                "_error",
             )
-            if batch_id is not None:
-                near_obs = Observation()
-                near_rejects = near_rejects.observe(
-                    near_obs, F.count(F.lit(1)).alias("n")
-                )
-            fence.fenced_append(near_rejects, rejected_path, bid, ("_error",))
-            kept = kept.join(near_ids, "doc_id", "left_anti")
             # SEVER LINEAGE before any sidecar append: kept's plan
             # reads the fp/band/sig sidecars (through the anti-joins
             # above), and appending to those paths invalidates every
@@ -417,152 +411,96 @@ def corpus_ingest_batch(
             # token index. localCheckpoint materializes the
             # micro-batch-sized frame and cuts the plan from the
             # sidecar paths entirely.
-            kept = kept.localCheckpoint()
-        kept.persist()
-        try:
-            # WRITE ORDER MATTERS: appending to a parquet path
-            # invalidates (and recaches by re-reading) every cached
-            # plan whose lineage scans that path. `kept` reads the fp
-            # sidecar and `_near_dup_ids` reads the band/sig sidecars,
-            # so each sidecar append must come AFTER every write whose
-            # plan reads it — fp last, sig before band's re-derivation
-            # is harmless (band candidates key on the band sidecar,
-            # still untouched).
-            ing_obs = Observation() if batch_id is not None else None
-            out = kept.drop("fp", "fp_bucket")
-            if ing_obs is not None:
-                out = out.observe(ing_obs, F.count(F.lit(1)).alias("n"))
-            fence.fenced_append(out, table_path, bid, (stratum_col,))
-            # Metric values were captured DURING the writes above
-            # (observe() side-channels on jobs that run anyway);
-            # reading them here blocks only until those jobs finish,
-            # and crucially needs no new action after the sidecar
-            # appends below invalidate the cached plans.
-            metric_rows = None
-            if batch_id is not None:
-                vals = in_obs.get
-                n_in = int(vals["n_in"])
-                rej = {
-                    v: int(vals[f"rej_{v}"])
-                    for v in reject_verdicts
-                    if int(vals[f"rej_{v}"])
-                }
-                n_ing = int(ing_obs.get["n"])
-                n_near = int(near_obs.get["n"]) if near_obs is not None else 0
-                n_dup = n_in - sum(rej.values()) - n_near - n_ing
-                metric_rows = (
-                    [(int(batch_id), "ingested", n_ing)]
-                    + ([(int(batch_id), "near_duplicate", n_near)] if near_dup else [])
-                    + [(int(batch_id), "duplicate", n_dup)]
-                    + [(int(batch_id), f"rejected:{v}", n) for v, n in sorted(rej.items())]
-                )
-            if near_dup:
-                from unified_log_aggregation_and_analytics_spark.operators.dedup import (
-                    band_rows,
-                )
-
-                surv_sigs = sigs.join(kept.select("doc_id"), "doc_id")
-                fence.fenced_append(
-                    surv_sigs.withColumn(
-                        "sig_bucket",
-                        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(N_FP_BUCKETS)),
-                    ).coalesce(1),
-                    _sig_sidecar_path(table_path),
-                    bid,
-                )
-                fence.fenced_append(
-                    band_rows(surv_sigs, num_hashes=ND_NUM_HASHES, band_size=ND_BAND_SIZE)
-                    .withColumn(
-                        "bh_bucket", F.pmod(F.col("band_hash"), F.lit(N_FP_BUCKETS))
-                    )
-                    .coalesce(1),
-                    _band_sidecar_path(table_path),
-                    bid,
-                )
-            if token_index is not None:
-                # must run BEFORE the fp-sidecar append below: the
-                # survivors frame reads the fp sidecar, and appending
-                # to it would recache `kept` as empty (see WRITE ORDER)
-                from unified_log_aggregation_and_analytics_spark.operators.relational import (
-                    append_token_index_fenced,
-                    append_token_index_table,
-                    build_token_index_table,
-                )
-
-                docs_new = kept.select("doc_id", "text")
-                if (
-                    token_index_delta is not None
-                    and spark.catalog.tableExists(token_index)
-                ):
-                    # fenced path: per-batch lineage, is_committed
-                    # short-circuits a committed replay, fenced_append
-                    # replaces a torn one — no anti-join guard needed
-                    append_token_index_fenced(
-                        docs_new, token_index, token_index_delta, bid
-                    )
-                elif spark.catalog.tableExists(token_index):
-                    if torn_retry:
-                        # Doc-granular idempotency for the one
-                        # non-fenced write: a torn predecessor may
-                        # have completed its postings append, so
-                        # anti-join the replay's survivors against
-                        # the doclen table (one row per indexed doc
-                        # — the cheap side) and localCheckpoint to
-                        # sever the lineage before appending into
-                        # the very tables the guard just read. The
-                        # residual window is the file-commit
-                        # protocol's own rename atomicity — the same
-                        # trust every Spark append carries.
-                        docs_new = docs_new.join(
-                            spark.table(f"{token_index}_doclen").select(
-                                "doc_id"
-                            ),
-                            "doc_id",
-                            "left_anti",
-                        ).localCheckpoint()
-                    append_token_index_table(docs_new, token_index)
-                else:
-                    build_token_index_table(docs_new, token_index)
-            # flat single-file sidecar appends (bucket is a DATA column):
-            # no reader prunes bucket directories, and one dir + ~60
-            # files per trigger was the measured per-trigger slope —
-            # 1 file/trigger keeps the anti-join's file count equal to
-            # the trigger count until compaction folds it to 1
-            fence.fenced_append(
-                kept.select("fp", "fp_bucket").coalesce(1), sidecar, bid
+            kept = kept.join(near_ids, "doc_id", "left_anti").localCheckpoint()
+        fb.persist(kept)
+        # WRITE ORDER MATTERS: appending to a parquet path
+        # invalidates (and recaches by re-reading) every cached
+        # plan whose lineage scans that path. `kept` reads the fp
+        # sidecar and `_near_dup_ids` reads the band/sig sidecars,
+        # so each sidecar append must come AFTER every write whose
+        # plan reads it — fp last, sig before band's re-derivation
+        # is harmless (band candidates key on the band sidecar,
+        # still untouched).
+        fb.append(
+            fb.observe(kept.drop("fp", "fp_bucket"), F.count(F.lit(1)).alias("n_ing")),
+            table_path,
+            stratum_col,
+        )
+        if near_dup:
+            from unified_log_aggregation_and_analytics_spark.operators.dedup import (
+                band_rows,
             )
-            if metric_rows is not None:
-                fence.fenced_append(
-                    fence.local_rows_df(
-                        spark, metric_rows, "batch_id long, outcome string, n long"
-                    ),
-                    f"{table_path}_metrics",
-                    bid,
+
+            surv_sigs = sigs.join(kept.select("doc_id"), "doc_id")
+            fb.append(
+                surv_sigs.withColumn(
+                    "sig_bucket",
+                    F.pmod(F.xxhash64(F.col("doc_id")), F.lit(N_FP_BUCKETS)),
+                ).coalesce(1),
+                _sig_sidecar_path(table_path),
+            )
+            fb.append(
+                band_rows(surv_sigs, num_hashes=ND_NUM_HASHES, band_size=ND_BAND_SIZE)
+                .withColumn(
+                    "bh_bucket", F.pmod(F.col("band_hash"), F.lit(N_FP_BUCKETS))
                 )
-            # THE commit: one marker covers table + DLQ + every
-            # sidecar + metrics; until it lands, none of this batch
-            # is visible to probes or later batches' dedup. (The
-            # optional token INDEX append above is a bucketed
-            # saveAsTable, not a fenced parquet path — the
-            # torn_retry anti-join against the doclen table makes
-            # its replay doc-granular idempotent.)
-            fence.mark_committed(spark, root, bid)
-        finally:
-            kept.unpersist()
-            if pre_nd is not None:
-                pre_nd.unpersist()
-            if sigs is not None:
-                sigs.unpersist()
-    finally:
-        scored.unpersist()
+                .coalesce(1),
+                _band_sidecar_path(table_path),
+            )
+        if token_index is not None:
+            # must run BEFORE the fp-sidecar append below: the
+            # survivors frame reads the fp sidecar, and appending
+            # to it would recache `kept` as empty (see WRITE ORDER)
+            from unified_log_aggregation_and_analytics_spark.operators.relational import (
+                append_token_index_fenced,
+                append_token_index_table,
+                build_token_index_table,
+            )
 
-
-@dataclass
-class CorpusPipelineResult:
-    query: object  # StreamingQuery
-
-    def await_done(self) -> None:
-        self.query.awaitTermination()
+            docs_new = kept.select("doc_id", "text")
+            if (
+                token_index_delta is not None
+                and spark.catalog.tableExists(token_index)
+            ):
+                # fenced path: per-batch lineage, is_committed
+                # short-circuits a committed replay, fenced_append
+                # replaces a torn one — no anti-join guard needed
+                append_token_index_fenced(
+                    docs_new, token_index, token_index_delta, fb.bid
+                )
+            elif spark.catalog.tableExists(token_index):
+                if torn_retry:
+                    # Doc-granular idempotency for the one
+                    # non-fenced write: a torn predecessor may
+                    # have completed its postings append, so
+                    # anti-join the replay's survivors against
+                    # the doclen table (one row per indexed doc
+                    # — the cheap side) and localCheckpoint to
+                    # sever the lineage before appending into
+                    # the very tables the guard just read. The
+                    # residual window is the file-commit
+                    # protocol's own rename atomicity — the same
+                    # trust every Spark append carries.
+                    docs_new = docs_new.join(
+                        spark.table(f"{token_index}_doclen").select("doc_id"),
+                        "doc_id",
+                        "left_anti",
+                    ).localCheckpoint()
+                append_token_index_table(docs_new, token_index)
+            else:
+                build_token_index_table(docs_new, token_index)
+        # flat single-file sidecar appends (bucket is a DATA column):
+        # no reader prunes bucket directories, and one dir + ~60
+        # files per trigger was the measured per-trigger slope —
+        # 1 file/trigger keeps the anti-join's file count equal to
+        # the trigger count until compaction folds it to 1. The
+        # metrics rows and THE commit marker follow on exit; until the
+        # marker lands, none of this batch is visible to probes or
+        # later batches' dedup. (The optional token INDEX append above
+        # is a bucketed saveAsTable, not a fenced parquet path — the
+        # torn_retry anti-join against the doclen table makes its
+        # replay doc-granular idempotent.)
+        fb.append(kept.select("fp", "fp_bucket").coalesce(1), sidecar)
 
 
 def run_corpus_pipeline(
@@ -578,7 +516,7 @@ def run_corpus_pipeline(
     token_index_delta: str | None = None,
     lm_model_path: str | None = None,
     max_avg_nll: float = 8.0,
-) -> CorpusPipelineResult:
+) -> PipelineResult:
     """Wire the corpus ingest end-to-end: readStream of documents ->
     foreachBatch(corpus_ingest_batch). Trigger defaults to the
     reference's 60 s buffering hint (utils.ts:46); tests pass
@@ -605,7 +543,6 @@ def run_corpus_pipeline(
     ``token_index_delta`` as well to switch post-first-batch appends
     to the FENCED per-batch-lineage path (corpus_ingest_batch
     docstring) — pinned BM25 probes over a live stream."""
-    trigger = trigger or {"processingTime": "60 seconds"}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         corpus_ingest_batch(
@@ -622,13 +559,7 @@ def run_corpus_pipeline(
             max_avg_nll=max_avg_nll,
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    return CorpusPipelineResult(q)
+    return start_sink(docs_stream, handle, checkpoint, trigger)
 
 
 def ingest_report(
@@ -818,33 +749,24 @@ def ingest_report_nd(
 def compact_sidecars(
     spark: SparkSession, table_path: str, files_per_partition: int = 1
 ) -> None:
-    """Sidecar maintenance: every micro-batch adds one file per task
-    to each sidecar partition, so file counts grow with trigger count
-    (~1 440/day/partition at the 60 s trigger) and every later batch's
-    anti-join pays the open cost. Folds each sidecar's COMMITTED rows
-    (fingerprints, and the near-dup band/sig tables when present) into
-    a single batch partition — ``_commit_batch=<max committed id>``,
-    an id whose marker already exists, so the compacted rows stay
-    visible through the fence with no marker surgery and the pipeline's
-    OTHER paths (table, DLQ, metrics) keep their markers untouched —
-    with ``files_per_partition`` files per bucket directory. Torn
-    (uncommitted) sidecar partitions are dropped: they were invisible
-    to the fence anyway. Dedup state is untouched, so routing decisions
-    are identical before and after (asserted in tests). Mechanics and
-    the marker-native fold protocol live in fence.compact_fenced —
-    one codepath shared with media/semantic, not three drifting
-    copies. Also rolls up the pipeline's commit markers
-    (fence.rollup_markers): 1 440 markers/day at the 60 s trigger
-    would otherwise grow the per-trigger marker listing forever —
-    data compaction and marker compaction belong to the same
-    maintenance cadence."""
-    root = fence.fence_root(table_path)
-    for path in (
-        _fp_sidecar_path(table_path),
-        _band_sidecar_path(table_path),
-        _sig_sidecar_path(table_path),
-    ):
-        fence.compact_fenced(
-            spark, path, root, files_per_partition=files_per_partition
-        )
-    fence.rollup_markers(spark, root)
+    """Sidecar maintenance: every micro-batch adds one file to each
+    sidecar, so file counts grow with trigger count (~1 440/day at the
+    60 s trigger) and every later batch's anti-join pays the open
+    cost. Folds each sidecar's COMMITTED rows (fingerprints, and the
+    near-dup band/sig tables when present) into one compaction
+    partition with ``files_per_partition`` files, then rolls up the
+    commit markers (fence.compact_paths, shared with media, semantic
+    and logs). Torn sidecar partitions are dropped — they were
+    invisible to the fence anyway — and dedup state is untouched, so
+    routing decisions are identical before and after (asserted in
+    tests)."""
+    fence.compact_paths(
+        spark,
+        fence.fence_root(table_path),
+        [
+            _fp_sidecar_path(table_path),
+            _band_sidecar_path(table_path),
+            _sig_sidecar_path(table_path),
+        ],
+        files_per_partition=files_per_partition,
+    )

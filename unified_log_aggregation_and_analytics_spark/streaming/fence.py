@@ -1,5 +1,23 @@
 """Manifest-fenced micro-batch commits — the shared exactly-once
-upgrade for the streaming sinks (corpus.py, media.py, vectors.py).
+contract of all five streaming sinks: the log pipeline's DLQ split
+(pipeline.dlq_split), the text corpus (corpus.py), media (media.py),
+semantic dedup (semantic.py) and the vector index (vectors.py).
+
+Every sink runs its micro-batch inside one ``FencedBatch``, which owns
+the scaffolding and leaves the sink only its gate and dedup logic:
+
+- batch id: a stream id is used as is, and a replay of a committed id
+  reports ``.committed`` so the sink returns before any work; manual
+  calls (``batch_id=None``) take the next free committed slot;
+- counts: ``observe`` attaches an ``Observation`` to a frame the sink
+  WRITES (its aggregates ride that write job; only observations whose
+  action ran are ever read). Manual calls observe nothing and write no
+  metrics;
+- writes: ``append`` is ``fenced_append`` under the batch id, in the
+  order the sink calls it; ``persist`` unpersists on exit;
+- commit: on a clean exit, the ``outcomes`` rows ``(batch_id, outcome,
+  n)`` append to ``<table>_metrics`` and then the marker lands; after
+  an exception neither is written, so the replay redoes the batch.
 
 The r7 design was at-least-once with a documented torn-batch window: a
 failure between a pipeline's table append and its sidecar append
@@ -51,7 +69,8 @@ is correct under object-store (no-rename) semantics:
   committed prefix's singles (union-semantics crash safety), bounding
   the per-trigger listing at O(recent batches) instead of O(batches
   ever) — wired into every pipeline's compaction entry point, probed
-  flat at 300 triggers (3.9 ms listing / 1 file).
+  flat at 300 triggers (3.9 ms listing / 1 file). ``compact_paths``
+  runs it after folding a sink's paths.
 - ``compact_fenced`` — folds the committed prefix's small files into
   a NEGATIVE compaction batch id and flips visibility with one
   ``_compacted_<n>_upto_<k>`` file inside the path; superseded
@@ -196,6 +215,79 @@ def mark_committed(spark: SparkSession, root: str, batch_id: int) -> None:
     out.close()
 
 
+class FencedBatch:
+    """One sink micro-batch under the fence (contract in the module
+    docstring). Use as a context manager; return at once when
+    ``.committed``. Fence functions are looked up as module globals at
+    call time, so wrappers patched onto this module see every call."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        batch_id: int | None,
+        metrics_path: str | None = None,
+    ) -> None:
+        self.spark, self.root = spark, root
+        self.committed = False
+        if batch_id is None:
+            # CONTRACT: manual mode shares the stream's batch-id space —
+            # offline/bootstrap use only; against a LIVE checkpointed
+            # stream it would claim the stream's next id and that
+            # trigger would short-circuit as a replay
+            done = committed_batches(spark, root)
+            self.bid = (done[-1] + 1) if done else 0
+            self.metrics_path = None
+        else:
+            self.bid = int(batch_id)
+            self.committed = is_committed(spark, root, self.bid)
+            self.metrics_path = metrics_path
+        # observed values -> [(outcome, n)]; set by a sink with metrics
+        self.outcomes = None
+        self._observations: list = []
+        self._persisted: list[DataFrame] = []
+
+    def observe(self, df: DataFrame, *aggs) -> DataFrame:
+        if self.metrics_path is None:
+            return df
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        self._observations.append(obs)
+        return df.observe(obs, *aggs)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self._persisted.append(df.persist())
+        return df
+
+    def append(self, df: DataFrame, path: str, *partition_cols: str) -> None:
+        fenced_append(df, path, self.bid, partition_cols)
+
+    def __enter__(self) -> "FencedBatch":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            if exc_type is None and not self.committed:
+                if self.metrics_path is not None:
+                    vals: dict = {}
+                    for obs in self._observations:
+                        vals.update(obs.get)
+                    rows = [(self.bid, o, int(n)) for o, n in self.outcomes(vals)]
+                    fenced_append(
+                        local_rows_df(
+                            self.spark, rows, "batch_id long, outcome string, n long"
+                        ),
+                        self.metrics_path,
+                        self.bid,
+                    )
+                # THE commit: one marker covers every write of the batch
+                mark_committed(self.spark, self.root, self.bid)
+        finally:
+            for df in reversed(self._persisted):
+                df.unpersist()
+
+
 def is_committed(spark: SparkSession, root: str, batch_id: int) -> bool:
     bid = int(batch_id)
     if path_exists(spark, f"{root}/{bid}"):
@@ -236,6 +328,27 @@ def committed_batches(spark: SparkSession, root: str) -> list[int]:
     return sorted(set(range(upto + 1)) | {b for b in singles if b > upto})
 
 
+def _prefix_end(ids: list[int]) -> int:
+    """Largest id of the contiguous run that starts at ``ids[0]``
+    (``ids`` sorted, non-empty)."""
+    k = ids[0]
+    for b in ids[1:]:
+        if b != k + 1:
+            break
+        k = b
+    return k
+
+
+def _batch_of(name: str) -> int | None:
+    """The id of a ``_commit_batch=<id>`` directory name, else None."""
+    if name.startswith(f"{BATCH_COL}="):
+        try:
+            return int(name.split("=", 1)[1])
+        except ValueError:
+            pass
+    return None
+
+
 def rollup_markers(spark: SparkSession, root: str) -> int:
     """Marker maintenance — pure METADATA compression, visibility
     unchanged: when batches 0..k are all committed (the steady state;
@@ -253,15 +366,7 @@ def rollup_markers(spark: SparkSession, root: str) -> int:
     ids = committed_batches(spark, root)
     if not ids or ids[0] != 0:
         return -1
-    k = 0
-    for b in ids:
-        if b == k:
-            k += 1
-        else:
-            break
-    k -= 1  # largest id of the contiguous 0..k prefix
-    if k < 0:
-        return -1
+    k = _prefix_end(ids)
     fs, p, jvm = _fs(spark, root)
     marker = jvm.org.apache.hadoop.fs.Path(f"{root}/_upto_{k}")
     fs.create(marker, True).close()
@@ -350,20 +455,10 @@ def compact_fenced(
         # the smallest committed id. With that established, the
         # contiguous prefix starts at done[0] instead of 0.
         for nm in names:
-            if nm.startswith(f"{BATCH_COL}="):
-                try:
-                    b = int(nm.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if 0 <= b < done[0]:
-                    return  # a pre-range batch could replay: skip
-    k = done[0]
-    for b in done:
-        if b == k:
-            k += 1
-        else:
-            break
-    k -= 1  # largest id of the contiguous committed prefix
+            b = _batch_of(nm)
+            if b is not None and 0 <= b < done[0]:
+                return  # a pre-range batch could replay: skip
+    k = _prefix_end(done)  # largest id of the contiguous committed prefix
     cid_prev, _ = _compact_state(spark, path)
     df = fenced_read(spark, path, root, keep_batch_col=True)
     if df is None:
@@ -398,15 +493,29 @@ def compact_fenced(
     # attempt's orphan: all invisible the moment the new marker
     # exists)
     for name in list_dir_names(spark, path):
-        if name.startswith(f"{BATCH_COL}="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
+        b = _batch_of(name)
+        if b is not None:
             if (0 <= b <= k) or (b < 0 and b != cid):
                 delete_path(spark, f"{path}/{name}")
         elif name.startswith("_compacted_") and name != f"_compacted_{-cid}_upto_{k}":
             delete_path(spark, f"{path}/{name}", recursive=False)
+
+
+def compact_paths(
+    spark: SparkSession,
+    root: str,
+    paths,
+    part_col: str | None = None,
+    files_per_partition: int = 1,
+) -> None:
+    """The one maintenance pass behind every sink's compactor: fold
+    each fenced path under ``root`` (compact_fenced), then roll up the
+    root's batch markers (rollup_markers) — 1 440 markers/day at the
+    60 s trigger would otherwise grow the per-trigger marker listing
+    forever, so data and marker compaction share one cadence."""
+    for path in paths:
+        compact_fenced(spark, path, root, part_col, files_per_partition)
+    rollup_markers(spark, root)
 
 
 def fenced_read(

@@ -38,8 +38,6 @@ committed batch's replay short-circuits to a no-op.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +48,10 @@ from unified_log_aggregation_and_analytics_spark.operators.multimodal import (
     media_gate_hash,
 )
 from unified_log_aggregation_and_analytics_spark.streaming import fence
+from unified_log_aggregation_and_analytics_spark.streaming.pipeline import (
+    PipelineResult,
+    start_sink,
+)
 
 # Modalities whose perceptual near-dup runs through the banded
 # Hamming machinery (64-bit fingerprint families): image dHash,
@@ -148,56 +150,43 @@ def media_ingest_batch(
        keyed on modality (keep-min), cross-batch vs the modality-qualified
        band + hash sidecars; rejects carry ``_error='near_duplicate'``;
     4. survivors append to ``table_path`` partitioned by modality;
-       fingerprints/hashes/bands append to the sidecars; with
-       ``batch_id``, outcome counts append to ``<table>_metrics`` as
-       the completion marker."""
+       fingerprints/hashes/bands append to the sidecars; with a stream
+       ``batch_id``, outcome counts append to ``<table>_metrics``
+       before the commit marker (fence.FencedBatch)."""
     spark = batch_df.sparkSession
     root = fence.fence_root(table_path)
-    if batch_id is None:
-        # manual/batch invocation: next free committed slot. CONTRACT:
-        # manual mode shares the stream's batch-id space — offline/
-        # bootstrap use only; against a LIVE checkpointed stream it
-        # would claim the stream's next id and that trigger would
-        # short-circuit as a replay (one dropped micro-batch)
-        done = fence.committed_batches(spark, root)
-        bid = (done[-1] + 1) if done else 0
-    else:
-        bid = int(batch_id)
-        if fence.is_committed(spark, root, bid):
+    with fence.FencedBatch(spark, root, batch_id, f"{table_path}_metrics") as fb:
+        if fb.committed:
             return  # replay of a fully-committed batch: exact no-op
-    gate = media_gate_hash(batch_df)
-    scored = batch_df.withColumn("fp", F.xxhash64("payload")).withColumn(
-        "fp_bucket", F.pmod(F.col("fp"), F.lit(N_BUCKETS))
-    ).join(gate, "media_id", "left")
-    # Batch-size + undecodable counts ride the first action over
-    # `scored` (the reject write) as observe() aggregates instead of
-    # dedicated count jobs (round-5 verdict item; same pattern as
-    # streaming/corpus.py).
-    from pyspark.sql import Observation
-
-    in_obs = Observation() if batch_id is not None else None
-    if in_obs is not None:
-        scored = scored.observe(
-            in_obs,
-            F.count(F.lit(1)).alias("n_in"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        ~F.coalesce(F.col("decode_ok"), F.lit(False)), F.lit(1)
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("n_undec"),
+        gate = media_gate_hash(batch_df)
+        undecodable = ~F.coalesce(F.col("decode_ok"), F.lit(False))
+        scored = batch_df.withColumn("fp", F.xxhash64("payload")).withColumn(
+            "fp_bucket", F.pmod(F.col("fp"), F.lit(N_BUCKETS))
+        ).join(gate, "media_id", "left")
+        # Batch-size + undecodable counts ride the first action over
+        # `scored` (the reject write) as observe() aggregates instead of
+        # dedicated count jobs (same pattern as streaming/corpus.py).
+        scored = fb.persist(
+            fb.observe(
+                scored,
+                F.count(F.lit(1)).alias("n_in"),
+                F.coalesce(F.sum(F.when(undecodable, F.lit(1))), F.lit(0))
+                .cast("long")
+                .alias("n_undec"),
+            )
         )
-    scored.persist()
-    try:
-        fence.fenced_append(
-            scored.filter(~F.coalesce(F.col("decode_ok"), F.lit(False)))
+        fb.outcomes = lambda m: [
+            ("ingested", m["n_ing"]),
+            ("near_duplicate", m["n_near"]),
+            ("duplicate", m["n_in"] - m["n_undec"] - m["n_near"] - m["n_ing"]),
+            ("rejected:undecodable", m["n_undec"]),
+        ]
+        fb.append(
+            scored.filter(undecodable)
             .drop("fp", "fp_bucket", "dhash", "decode_ok")
             .withColumn("_error", F.lit("undecodable")),
             rejected_path,
-            bid,
-            ("_error",),
+            "_error",
         )
         kept = scored.filter(F.col("decode_ok"))
         first = kept.groupBy("fp").agg(F.min("media_id").alias("media_id"))
@@ -208,14 +197,13 @@ def media_ingest_batch(
         seen = fence.fenced_read(spark, _fp_sidecar(table_path), root)
         if seen is not None:
             kept = kept.join(seen, ["fp_bucket", "fp"], "left_anti")
-        pre_nd = kept
-        pre_nd.persist()
+        fb.persist(kept)
         # within-batch perceptual pairs: ONE banded join for every
         # modality — modality rides in the equi-join key, so a pair
         # never crosses hash families (the batch report's form,
         # multimodal.media_ingest_report)
         within = hamming_near_dup(
-            pre_nd.filter(
+            kept.filter(
                 F.col("modality").isin(*PERCEPTUAL_MODALITIES) & F.col("dhash").isNotNull()
             ).select("media_id", "modality", "dhash"),
             "dhash",
@@ -224,52 +212,34 @@ def media_ingest_batch(
             key_cols=("modality",),
         ).select(F.col("id_b").alias("media_id"))
         cross = _cross_batch_near_ids(
-            spark,
-            pre_nd.filter(F.col("dhash").isNotNull()),
-            table_path,
-            max_hamming,
+            spark, kept.filter(F.col("dhash").isNotNull()), table_path, max_hamming
         )
         near_ids = within.union(cross).distinct()
-        near_obs = Observation() if batch_id is not None else None
-        near_rejects = (
-            kept.join(near_ids, "media_id")
-            .drop("fp", "fp_bucket", "dhash")
-            .withColumn("_error", F.lit("near_duplicate"))
+        fb.append(
+            fb.observe(
+                kept.join(near_ids, "media_id")
+                .drop("fp", "fp_bucket", "dhash")
+                .withColumn("_error", F.lit("near_duplicate")),
+                F.count(F.lit(1)).alias("n_near"),
+            ),
+            rejected_path,
+            "_error",
         )
-        if near_obs is not None:
-            near_rejects = near_rejects.observe(
-                near_obs, F.count(F.lit(1)).alias("n")
-            )
-        fence.fenced_append(near_rejects, rejected_path, bid, ("_error",))
-        kept = kept.join(near_ids, "media_id", "left_anti")
         # SEVER LINEAGE before the sidecar appends (see module
         # docstring) — after this the append order below is free.
-        kept = kept.localCheckpoint()
-        ing_obs = Observation() if batch_id is not None else None
-        out = kept.drop("fp", "fp_bucket", "dhash", "decode_ok")
-        if ing_obs is not None:
-            out = out.observe(ing_obs, F.count(F.lit(1)).alias("n"))
-        fence.fenced_append(out, table_path, bid, ("modality",))
-        metric_rows = None
-        if batch_id is not None:
-            vals = in_obs.get
-            n_in = int(vals["n_in"])
-            n_undec = int(vals["n_undec"])
-            n_ing = int(ing_obs.get["n"])
-            n_near = int(near_obs.get["n"])
-            n_dup = n_in - n_undec - n_near - n_ing
-            metric_rows = [
-                (int(batch_id), "ingested", n_ing),
-                (int(batch_id), "near_duplicate", n_near),
-                (int(batch_id), "duplicate", n_dup),
-                (int(batch_id), "rejected:undecodable", n_undec),
-            ]
+        kept = kept.join(near_ids, "media_id", "left_anti").localCheckpoint()
+        fb.append(
+            fb.observe(
+                kept.drop("fp", "fp_bucket", "dhash", "decode_ok"),
+                F.count(F.lit(1)).alias("n_ing"),
+            ),
+            table_path,
+            "modality",
+        )
         # flat single-file sidecar appends (bucket keys are DATA
         # columns — no reader prunes their directories, and dir count
         # was the measured per-trigger slope; see corpus.py)
-        fence.fenced_append(
-            kept.select("fp", "fp_bucket").coalesce(1), _fp_sidecar(table_path), bid
-        )
+        fb.append(kept.select("fp", "fp_bucket").coalesce(1), _fp_sidecar(table_path))
         # perceptual sidecars: only fingerprinted modalities, and the
         # modality column rides along so future candidate joins never
         # cross hash families
@@ -279,39 +249,15 @@ def media_ingest_batch(
             "dhash",
             F.pmod(F.xxhash64(F.col("media_id")), F.lit(N_BUCKETS)).alias("id_bucket"),
         )
-        fence.fenced_append(
-            surv_hashes.coalesce(1), _hash_sidecar(table_path), bid
-        )
-        fence.fenced_append(
+        fb.append(surv_hashes.coalesce(1), _hash_sidecar(table_path))
+        fb.append(
             hash_band_rows(surv_hashes.drop("id_bucket", "modality"), "dhash", bands=HASH_BANDS)
             .join(surv_hashes.select("media_id", "modality"), "media_id")
             .drop("dhash")
             .withColumn("bv_bucket", F.pmod(F.col("band_val"), F.lit(N_BUCKETS)))
             .coalesce(1),
             _band_sidecar(table_path),
-            bid,
         )
-        if metric_rows is not None:
-            fence.fenced_append(
-                fence.local_rows_df(
-                    spark, metric_rows, "batch_id long, outcome string, n long"
-                ),
-                f"{table_path}_metrics",
-                bid,
-            )
-        # THE commit: one marker covers table + DLQ + all three
-        # sidecars + metrics (streaming/fence.py).
-        fence.mark_committed(spark, root, bid)
-        pre_nd.unpersist()
-    finally:
-        scored.unpersist()
-
-
-@dataclass
-class MediaPipelineResult:
-    query: object
-    table_path: str
-    rejected_path: str
 
 
 def run_media_pipeline(
@@ -323,7 +269,7 @@ def run_media_pipeline(
     max_hamming: int = 3,
     available_now: bool = True,
     transform=None,
-) -> MediaPipelineResult:
+) -> PipelineResult:
     """File-source streaming media ingest: parquet media batches land
     in ``source_dir``; each micro-batch runs media_ingest_batch via
     foreachBatch (checkpointed — replay semantics per the module
@@ -365,14 +311,9 @@ def run_media_pipeline(
             df, table_path, rejected_path, max_hamming=max_hamming, batch_id=bid
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return MediaPipelineResult(query, table_path, rejected_path)
+    # processingTime 0 is Spark's own default trigger
+    trigger = {"availableNow": True} if available_now else {"processingTime": "0 seconds"}
+    return start_sink(stream, _handle, checkpoint_dir, trigger)
 
 
 def compact_media_sidecars(
@@ -384,17 +325,11 @@ def compact_media_sidecars(
     partition with ``files_per_partition`` files per bucket directory
     — dedup state untouched, routing decisions identical before and
     after; torn (uncommitted) partitions are dropped, they were
-    invisible to the fence anyway. Mechanics in fence.compact_fenced
-    (one codepath shared with corpus/semantic); commit markers roll
-    up in the same cadence (fence.rollup_markers — bounds the
-    per-trigger marker listing at O(recent batches))."""
-    root = fence.fence_root(table_path)
-    for path in (
-        _fp_sidecar(table_path),
-        _hash_sidecar(table_path),
-        _band_sidecar(table_path),
-    ):
-        fence.compact_fenced(
-            spark, path, root, files_per_partition=files_per_partition
-        )
-    fence.rollup_markers(spark, root)
+    invisible to the fence anyway. Mechanics, including the
+    commit-marker rollup, in fence.compact_paths."""
+    fence.compact_paths(
+        spark,
+        fence.fence_root(table_path),
+        [_fp_sidecar(table_path), _hash_sidecar(table_path), _band_sidecar(table_path)],
+        files_per_partition=files_per_partition,
+    )

@@ -43,6 +43,7 @@ from unified_log_aggregation_and_analytics_spark.functions.apache_log import (
 from unified_log_aggregation_and_analytics_spark.operators.transforms import (
     lambda_telemetry_transform,
 )
+from unified_log_aggregation_and_analytics_spark.streaming import fence
 
 UNIFIED_COLUMNS = ("source", "log_date", "ts", "level", "message", "attrs", "_raw")
 
@@ -180,10 +181,27 @@ NORMALIZERS = {
 
 @dataclass
 class PipelineResult:
+    """What every ``run_*`` pipeline returns: the running query."""
+
     query: object  # StreamingQuery
 
     def await_done(self) -> None:
         self.query.awaitTermination()
+
+
+def start_sink(
+    stream: DataFrame, handle, checkpoint: str, trigger: dict | None = None
+) -> PipelineResult:
+    """Start ``stream`` through ``foreachBatch(handle)``, checkpointed
+    at ``checkpoint``. ``trigger`` defaults to the reference's 60 s
+    buffering hint (utils.ts:69-72); tests pass availableNow=True."""
+    q = (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**(trigger or {"processingTime": "60 seconds"}))
+        .start()
+    )
+    return PipelineResult(q)
 
 
 def _log_fence_root(table_path: str, source: str | None) -> str:
@@ -201,7 +219,7 @@ def dlq_split(
     rejected_path: str,
     source: str | None = None,
     batch_id: int | None = None,
-) -> tuple[int, int]:
+) -> None:
     """K3 — validation split for one micro-batch: rows with a parseable
     event time go to the table (partitioned by source/log_date), rows
     without go to the dead-letter path with an ``_error`` column.
@@ -229,43 +247,27 @@ def dlq_split(
     ``read_log_table`` to see committed rows only; a raw
     ``spark.read.parquet`` also sees torn partitions (at-least-once),
     which is the pre-fence behavior."""
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
-    spark = batch_df.sparkSession
-    root = _log_fence_root(table_path, source)
-    if batch_id is None:
-        done = fence.committed_batches(spark, root)
-        bid = (done[-1] + 1) if done else 0
-    else:
-        bid = int(batch_id)
-        if fence.is_committed(spark, root, bid):
-            return (0, 0)  # replay of a fully-committed batch: no-op
-    # persist: the valid and rejected writes are two actions over the
-    # same micro-batch — without it each one re-reads the source (2x
-    # ingest cost and doubled numInputRows in progress metrics)
-    batch_df.persist()
-    try:
+    with fence.FencedBatch(
+        batch_df.sparkSession, _log_fence_root(table_path, source), batch_id
+    ) as fb:
+        if fb.committed:
+            return  # replay of a fully-committed batch: no-op
+        # persist: the valid and rejected writes are two actions over the
+        # same micro-batch — without it each one re-reads the source (2x
+        # ingest cost and doubled numInputRows in progress metrics)
+        fb.persist(batch_df)
         valid = batch_df.filter(F.col("ts").isNotNull())
         invalid = batch_df.filter(F.col("ts").isNull()).withColumn(
             "_error", F.lit("unparseable event time")
         )
         if source is not None:
-            fence.fenced_append(
-                valid.drop("source"),
-                f"{table_path}/source={source}",
-                bid,
-                ("log_date",),
+            fb.append(
+                valid.drop("source"), f"{table_path}/source={source}", "log_date"
             )
-            fence.fenced_append(
-                invalid.drop("source"), f"{rejected_path}/source={source}", bid
-            )
+            fb.append(invalid.drop("source"), f"{rejected_path}/source={source}")
         else:
-            fence.fenced_append(valid, table_path, bid, ("source", "log_date"))
-            fence.fenced_append(invalid, rejected_path, bid)
-        fence.mark_committed(spark, root, bid)
-    finally:
-        batch_df.unpersist()
-    return (0, 0)
+            fb.append(valid, table_path, "source", "log_date")
+            fb.append(invalid, rejected_path)
 
 
 def log_table_snapshot(spark, table_path: str) -> dict[str | None, int]:
@@ -279,8 +281,6 @@ def log_table_snapshot(spark, table_path: str) -> dict[str | None, int]:
     hole a single global max id has). Writers that appear later are
     absent from the dict and therefore excluded — at snapshot time
     they had contributed nothing. O(writers) tiny marker listings."""
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
     snap: dict[str | None, int] = {}
     entries = fence.list_dir_names(spark, table_path)
     for d in entries:
@@ -323,8 +323,6 @@ def read_log_table(
     one bound to every writer: exact for the single-writer unified
     layout, a trigger-aligned cut for per-source subtrees only when
     the sources share a cadence."""
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
     entries = fence.list_dir_names(spark, table_path)
     parts = []
     for d in entries:
@@ -389,23 +387,15 @@ def compact_log_table(
     O(days), not O(triggers). Run compaction before bulk retention.
     Offline maintenance; see fence.compact_fenced for the swap
     contract."""
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
     for d in fence.list_dir_names(spark, table_path):
-        if not d.startswith("source="):
-            continue
-        src = d.split("=", 1)[1]
-        fence.compact_fenced(
-            spark,
-            f"{table_path}/{d}",
-            _log_fence_root(table_path, src),
-            "log_date",
-            files_per_partition,
-        )
-        # marker compression rides the same cadence: 1 440
-        # markers/day/source at the 60 s trigger otherwise grows the
-        # per-trigger marker listing without bound
-        fence.rollup_markers(spark, _log_fence_root(table_path, src))
+        if d.startswith("source="):
+            fence.compact_paths(
+                spark,
+                _log_fence_root(table_path, d.split("=", 1)[1]),
+                [f"{table_path}/{d}"],
+                "log_date",
+                files_per_partition,
+            )
 
 
 def run_pipeline(
@@ -420,20 +410,13 @@ def run_pipeline(
     (DLQ split -> partitioned parquet). ``trigger`` defaults to the
     reference's 60 s buffering hint; tests pass availableNow=True."""
     normalized = NORMALIZERS[source_name](source_df)
-    trigger = trigger or {"processingTime": "60 seconds"}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         dlq_split(
             batch_df, table_path, rejected_path, source=source_name, batch_id=batch_id
         )
 
-    q = (
-        normalized.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    return PipelineResult(q)
+    return start_sink(normalized, handle, checkpoint, trigger)
 
 
 def expire_partitions(
@@ -457,8 +440,6 @@ def expire_partitions(
     (S3A/HDFS/local), at ANY partition depth — both log layouts
     (``source=/.../log_date=`` and the compacted
     ``_commit_batch=-n/log_date=`` form) prune correctly."""
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
     removed: list[str] = []
     prefix = f"{date_col}="
     stack = [table_path]

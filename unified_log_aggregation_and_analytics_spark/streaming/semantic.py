@@ -23,9 +23,9 @@ Each micro-batch:
    — both checks come out of the same two GEMMs, so per-trigger cost
    tracks the delta's cell populations, never the corpus text;
 3. survivors append to the table and the cell sidecar; rejects
-   dead-letter with ``_error='semantic_duplicate'``; with a batch_id,
-   outcome counts append to ``<table>_metrics`` as the completion
-   marker.
+   dead-letter with ``_error='semantic_duplicate'``; with a stream
+   batch_id, outcome counts append to ``<table>_metrics`` before the
+   commit marker (fence.FencedBatch).
 
 WRITE ORDER: the survivor frame's lineage reads the cell sidecar (the
 cross-batch check), so it is ``localCheckpoint``-ed BEFORE the sidecar
@@ -48,8 +48,6 @@ per-trigger small files.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +55,10 @@ from pyspark.sql import functions as F
 
 from unified_log_aggregation_and_analytics_spark.operators.similarity import ivf_assign
 from unified_log_aggregation_and_analytics_spark.streaming import fence
+from unified_log_aggregation_and_analytics_spark.streaming.pipeline import (
+    PipelineResult,
+    start_sink,
+)
 
 
 def _cell_sidecar(table_path: str) -> str:
@@ -125,22 +127,10 @@ def semantic_ingest_batch(
     docstring for the architecture and write-order contract)."""
     spark = batch_df.sparkSession
     root = fence.fence_root(table_path)
-    if batch_id is None:
-        # manual/batch invocation: next free committed slot. CONTRACT:
-        # manual mode shares the stream's batch-id space — offline/
-        # bootstrap use only; against a LIVE checkpointed stream it
-        # would claim the stream's next id and that trigger would
-        # short-circuit as a replay (one dropped micro-batch)
-        done = fence.committed_batches(spark, root)
-        bid = (done[-1] + 1) if done else 0
-    else:
-        bid = int(batch_id)
-        if fence.is_committed(spark, root, bid):
+    with fence.FencedBatch(spark, root, batch_id, f"{table_path}_metrics") as fb:
+        if fb.committed:
             return  # replay of a fully-committed batch: exact no-op
-    assigned = ivf_assign(batch_df, centroids, vec_col=vec_col)
-    assigned.persist()
-    drops = None
-    try:
+        assigned = fb.persist(ivf_assign(batch_df, centroids, vec_col=vec_col))
         # COMMITTED sidecar rows only (fence.py) — None covers "no
         # sidecar yet": a missing path (first trigger) or a
         # schema-less directory (an earlier batch whose survivors
@@ -163,73 +153,39 @@ def semantic_ingest_batch(
                 r["cell"] for r in assigned.select("cell").distinct().collect()
             ]
             old = old.filter(F.col("cell").isin(batch_cells))
-        drops = (
+        # persisted: referenced by the reject write AND the anti-join —
+        # without it the sidecar scan + both GEMMs run twice per trigger
+        drops = fb.persist(
             _semantic_drop_ids(assigned, old, threshold, id_col=id_col, vec_col=vec_col)
             .withColumnRenamed("drop_id", id_col)
-            .persist()  # referenced by the reject write AND the
-            # anti-join: without this the sidecar scan + both GEMMs
-            # run twice per trigger
         )
-        # Metric counts ride the write jobs via observe() — a column
-        # aggregate collected as a side effect of the action that runs
-        # anyway — instead of dedicated .count() jobs per trigger (the
-        # round-5 verdict item: 2 extra jobs per micro-batch).
-        from pyspark.sql import Observation
-
-        rej_obs = Observation() if batch_id is not None else None
-        rejected = (
-            assigned.join(drops, id_col)
-            .drop("cell")
-            .withColumn("_error", F.lit("semantic_duplicate"))
+        # Metric counts ride the write jobs via observe() instead of
+        # dedicated .count() jobs per trigger.
+        fb.outcomes = lambda m: [
+            ("ingested", m["n_ing"]),
+            ("semantic_duplicate", m["n_dup"]),
+        ]
+        fb.append(
+            fb.observe(
+                assigned.join(drops, id_col)
+                .drop("cell")
+                .withColumn("_error", F.lit("semantic_duplicate")),
+                F.count(F.lit(1)).alias("n_dup"),
+            ),
+            rejected_path,
         )
-        if rej_obs is not None:
-            rejected = rejected.observe(rej_obs, F.count(F.lit(1)).alias("n"))
-        fence.fenced_append(rejected, rejected_path, bid)
-        kept = assigned.join(drops, id_col, "left_anti")
         # SEVER LINEAGE before the sidecar append (module docstring).
-        kept = kept.localCheckpoint()
-        ing_obs = Observation() if batch_id is not None else None
-        out = kept.drop("cell")
-        if ing_obs is not None:
-            out = out.observe(ing_obs, F.count(F.lit(1)).alias("n"))
-        fence.fenced_append(out, table_path, bid)
-        metric_rows = None
-        if batch_id is not None:
-            metric_rows = [
-                (int(batch_id), "ingested", int(ing_obs.get["n"])),
-                (int(batch_id), "semantic_duplicate", int(rej_obs.get["n"])),
-            ]
+        kept = assigned.join(drops, id_col, "left_anti").localCheckpoint()
+        fb.append(
+            fb.observe(kept.drop("cell"), F.count(F.lit(1)).alias("n_ing")), table_path
+        )
         # flat single-file sidecar append: cell rides as a data
         # column — the cross-batch check filters on cell VALUES
         # (footer min/max skipping after compaction), and directory
         # count per trigger was the measured slope (see corpus.py)
-        fence.fenced_append(
-            kept.select(id_col, "cell", vec_col).coalesce(1),
-            _cell_sidecar(table_path),
-            bid,
+        fb.append(
+            kept.select(id_col, "cell", vec_col).coalesce(1), _cell_sidecar(table_path)
         )
-        if metric_rows is not None:
-            fence.fenced_append(
-                fence.local_rows_df(
-                    spark, metric_rows, "batch_id long, outcome string, n long"
-                ),
-                f"{table_path}_metrics",
-                bid,
-            )
-        # THE commit: one marker covers table + DLQ + cell sidecar +
-        # metrics (streaming/fence.py).
-        fence.mark_committed(spark, root, bid)
-    finally:
-        assigned.unpersist()
-        if drops is not None:
-            drops.unpersist()
-
-
-@dataclass
-class SemanticPipelineResult:
-    query: object
-    table_path: str
-    rejected_path: str
 
 
 def run_semantic_pipeline(
@@ -241,12 +197,11 @@ def run_semantic_pipeline(
     centroids: np.ndarray,
     threshold: float = 0.35,
     trigger: dict | None = None,
-) -> SemanticPipelineResult:
+) -> PipelineResult:
     """Wire the online semantic dedup end-to-end: parquet readStream
     of embedding rows -> foreachBatch(semantic_ingest_batch) with the
     frozen centroids. Trigger defaults to the reference's 60 s
     buffering hint (utils.ts:46); tests pass ``availableNow=True``."""
-    trigger = trigger or {"processingTime": "60 seconds"}
     stream = spark.readStream.schema(
         spark.read.parquet(source_dir).schema
     ).parquet(source_dir)
@@ -257,13 +212,7 @@ def run_semantic_pipeline(
             threshold=threshold, batch_id=bid,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    return SemanticPipelineResult(q, table_path, rejected_path)
+    return start_sink(stream, handle, checkpoint, trigger)
 
 
 def compact_cell_sidecar(
@@ -272,16 +221,12 @@ def compact_cell_sidecar(
     """Fold the per-trigger small files of the cell sidecar back to
     ``files_per_partition`` per cell — same contract and SAME
     implementation as the corpus/media sidecar compactors
-    (fence.compact_fenced; one compaction codepath, not three
-    drifting copies). Only COMMITTED rows survive, rewritten under an
-    already-committed batch partition, so the sidecar stays readable
-    through the fence and torn rows are never resurrected. Offline
-    maintenance with respect to this path's writer; commit markers
-    roll up in the same cadence (fence.rollup_markers)."""
-    fence.compact_fenced(
+    (fence.compact_paths, which also rolls up the commit markers).
+    Only COMMITTED rows survive, so torn rows are never resurrected.
+    Offline maintenance with respect to this path's writer."""
+    fence.compact_paths(
         spark,
-        _cell_sidecar(table_path),
         fence.fence_root(table_path),
+        [_cell_sidecar(table_path)],
         files_per_partition=files_per_partition,
     )
-    fence.rollup_markers(spark, fence.fence_root(table_path))

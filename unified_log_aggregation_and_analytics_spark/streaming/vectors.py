@@ -21,7 +21,8 @@ Per micro-batch:
    and land in the index's fenced delta area, visible to ivf_probe as
    soon as the batch commits;
 4. METRICS — per-batch outcome counts land at ``<path>_metrics``
-   (K5 parity, observe()-style accounting);
+   (K5 parity; the counts ride the reject write as observe()
+   aggregates, and manual calls write none);
 5. COMMIT — one shared marker (streaming/fence.py) makes the whole
    batch visible atomically.
 
@@ -44,12 +45,14 @@ decision driven by the manifest's append/build ratio.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from unified_log_aggregation_and_analytics_spark.streaming import fence
+from unified_log_aggregation_and_analytics_spark.streaming.pipeline import (
+    PipelineResult,
+    start_sink,
+)
 
 N_ID_BUCKETS = 64
 
@@ -80,56 +83,43 @@ def vector_ingest_batch(
     the frozen rotation for ivfopq; fenced lineage is what keeps
     training-run snapshot pins sound over a streaming-maintained PQ
     index). meta_cols are an IVF-only feature."""
-    from unified_log_aggregation_and_analytics_spark.operators.ann_index import (
-        append_ivf_index_fenced,
-        append_ivfopq_index_fenced,
-        append_ivfpq_index_fenced,
-        append_rotated_prefix_index_fenced,
-        manifest_dim,
-    )
+    from unified_log_aggregation_and_analytics_spark.operators import ann_index as A
 
-    if index_kind not in ("ivf", "rotated_prefix", "ivfpq", "ivfopq"):
+    appenders = {
+        "ivf": A.append_ivf_index_fenced,
+        "rotated_prefix": A.append_rotated_prefix_index_fenced,
+        "ivfpq": A.append_ivfpq_index_fenced,
+        "ivfopq": A.append_ivfopq_index_fenced,
+    }
+    if index_kind not in appenders:
         raise ValueError(f"unknown index_kind {index_kind!r}")
     if index_kind != "ivf" and meta_cols:
         raise ValueError("meta_cols are an IVF-index feature")
 
     spark = batch_df.sparkSession
-    dim = manifest_dim(index_path)
-    if dim is None:
-        # pre-manifest index: derive the width from the centroid artifact
-        from unified_log_aggregation_and_analytics_spark.operators.ann_index import (
-            load_centroids,
-        )
-
-        dim = int(load_centroids(spark, index_path, vec_col).shape[1])
-
     root = fence.fence_root(index_path)
-    if batch_id is None:
-        # manual/batch invocation: next free committed slot (the
-        # corpus/media/semantic sinks' convention) — hardcoding 0 made
-        # every manual call after the first hit is_committed and
-        # silently drop the batch. CONTRACT: manual mode shares the
-        # stream's batch-id space, so it is for offline/bootstrap use
-        # only — a manual call against a LIVE checkpointed stream
-        # claims the stream's next id, and that trigger would then
-        # short-circuit as a replay (one dropped micro-batch)
-        done = fence.committed_batches(spark, root)
-        bid = (done[-1] + 1) if done else 0
-    else:
-        bid = int(batch_id)
-        if fence.is_committed(spark, root, bid):
+    with fence.FencedBatch(spark, root, batch_id, f"{index_path}_metrics") as fb:
+        if fb.committed:
             return  # replay of a fully-committed batch: exact no-op
-
-    ok = F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(dim))
-    gated = batch_df.withColumn("_ok", ok)
-    gated.persist()
-    try:
-        fence.fenced_append(
+        dim = A.manifest_dim(index_path)
+        if dim is None:
+            # pre-manifest index: derive the width from the centroid artifact
+            dim = int(A.load_centroids(spark, index_path, vec_col).shape[1])
+        ok = F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(dim))
+        # batch-size + reject counts ride the reject write (its first
+        # action) as observe() aggregates, not dedicated count jobs
+        gated = fb.persist(
+            fb.observe(
+                batch_df.withColumn("_ok", ok),
+                F.count(F.lit(1)).alias("n_in"),
+                F.coalesce(F.sum((~F.col("_ok")).cast("long")), F.lit(0)).alias("n_bad"),
+            )
+        )
+        fb.append(
             gated.filter(~F.col("_ok"))
             .drop("_ok")
             .withColumn("_error", F.lit("bad_dimension")),
             rejected_path,
-            bid,
         )
         kept = gated.filter(F.col("_ok")).drop("_ok")
         # within-batch dedup: same-id rows can differ in payload
@@ -161,34 +151,21 @@ def vector_ingest_batch(
         # path would recache the plan against post-append state (the
         # corpus.py WRITE ORDER incident class).
         kept = kept.localCheckpoint()
-        n_in = gated.count()
+        # the one count job left: it guards the index append
         n_kept = kept.count()
-        n_bad = gated.filter(~F.col("_ok")).count()
+        fb.outcomes = lambda m: [
+            ("ingested", n_kept),
+            ("duplicate", m["n_in"] - m["n_bad"] - n_kept),
+            ("rejected:bad_dimension", m["n_bad"]),
+        ]
         if n_kept:
-            if index_kind == "ivf":
-                append_ivf_index_fenced(
-                    kept,
-                    index_path,
-                    bid,
-                    vec_col=vec_col,
-                    id_col=id_col,
-                    meta_cols=meta_cols,
-                )
-            elif index_kind == "ivfpq":
-                append_ivfpq_index_fenced(
-                    kept, index_path, bid, vec_col=vec_col, id_col=id_col
-                )
-            elif index_kind == "ivfopq":
-                append_ivfopq_index_fenced(
-                    kept, index_path, bid, vec_col=vec_col, id_col=id_col
-                )
-            else:
-                append_rotated_prefix_index_fenced(
-                    kept, index_path, bid, vec_col=vec_col, id_col=id_col
-                )
+            extra = {"meta_cols": meta_cols} if meta_cols else {}
+            appenders[index_kind](
+                kept, index_path, fb.bid, vec_col=vec_col, id_col=id_col, **extra
+            )
         # flat single-file sidecar append (id_bucket as data column;
         # the anti-join never pruned its directories — see corpus.py)
-        fence.fenced_append(
+        fb.append(
             kept.select(
                 id_col,
                 F.pmod(F.xxhash64(F.col(id_col)), F.lit(N_ID_BUCKETS)).alias(
@@ -196,29 +173,7 @@ def vector_ingest_batch(
                 ),
             ).coalesce(1),
             sidecar,
-            bid,
         )
-        rows = [
-            (bid, "ingested", n_kept),
-            (bid, "duplicate", n_in - n_bad - n_kept),
-            (bid, "rejected:bad_dimension", n_bad),
-        ]
-        fence.fenced_append(
-            fence.local_rows_df(spark, rows, "batch_id long, outcome string, n long"),
-            f"{index_path}_metrics",
-            bid,
-        )
-        # THE commit: one marker covers index delta + DLQ + sidecar +
-        # metrics; until it lands, none of this batch is visible to
-        # probes or to later batches' dedup.
-        fence.mark_committed(spark, root, bid)
-    finally:
-        gated.unpersist()
-
-
-@dataclass
-class VectorPipelineResult:
-    query: object  # StreamingQuery
 
 
 def maybe_merge_delta(
@@ -285,7 +240,7 @@ def run_vector_pipeline(
     meta_cols: tuple[str, ...] = (),
     merge_every: int | None = 16,
     maintenance: str = "compact",
-) -> VectorPipelineResult:
+) -> PipelineResult:
     """readStream of embeddings -> foreachBatch(vector_ingest_batch):
     the continuously-probe-able vector index. Trigger defaults to the
     reference's 60 s buffering hint; tests pass availableNow.
@@ -302,7 +257,6 @@ def run_vector_pipeline(
     filesystems, killing the stream from inside foreachBatch).
     merge_every=None disables the policy (the offline tools remain
     available)."""
-    trigger = trigger or {"processingTime": "60 seconds"}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         vector_ingest_batch(
@@ -319,10 +273,4 @@ def run_vector_pipeline(
                 batch_df.sparkSession, index_path, merge_every, maintenance
             )
 
-    q = (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    return VectorPipelineResult(q)
+    return start_sink(vec_stream, handle, checkpoint, trigger)
