@@ -471,3 +471,40 @@ def test_fenced_batch_manual_mode_after_rollup(spark, tmp_path):
     assert fence.committed_batches(spark, root) == [0, 1, 2, 3]
     assert _visible(spark, path, root) == {1, 101, 201, 7}
     assert not Path(metrics).exists()
+
+
+def test_is_committed_costs_one_marker_listing(spark, tmp_path, monkeypatch):
+    """A fresh batch id (every new trigger) costs one ``exists`` plus one
+    ``listStatus`` of the marker root; committed and rollup-covered ids
+    are answered from the same listing."""
+    root = str(tmp_path / "t_commits")
+    for bid in range(3):
+        fence.mark_committed(spark, root, bid)
+    fence.rollup_markers(spark, root)
+    fence.mark_committed(spark, root, 5)
+
+    calls: list[str] = []
+    real_fs = fence._fs
+
+    class CountingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            method = getattr(self._fs, name)
+
+            def counted(*args):
+                calls.append(name)
+                return method(*args)
+
+            return counted
+
+    def counting_fs(spark, path):
+        fs, p, jvm = real_fs(spark, path)
+        return CountingFs(fs), p, jvm
+
+    monkeypatch.setattr(fence, "_fs", counting_fs)
+    for bid, want in ((6, False), (3, False), (5, True), (1, True)):
+        calls.clear()
+        assert fence.is_committed(spark, root, bid) is want
+        assert calls == ["exists", "listStatus"], (bid, calls)

@@ -1,52 +1,88 @@
 """Persisted ANN indexes: build once, probe with partition pruning.
 
-The scan-time ANN paths (operators/similarity.py ``ann_lsh_topk`` /
-``knn_ivf``) are correct but recompute their bucketing per query —
-a scan, not an index. This module materializes the index the
-docstrings there promise:
+The reference delegates vector search to its search backend; this
+module builds that backend's index files, Spark-natively (SURVEY.md
+§2 X3). Every index kind is one PARTITIONER times one CODEC, optionally
+behind a frozen ROTATION — the composition FAISS's ``index_factory``
+spells as ``"OPQ16,IVF256,PQ16"``. ``KINDS`` is the whole table:
 
-- ``build_lsh_index``: sign-sketch every vector once and write the
-  table **partitioned by bucket**. A probe enumerates the ≤ C(n_bits,
-  d) bucket ids within Hamming distance ``multiprobe_bits`` of the
-  query's bucket and reads only those partitions — the filter is a
-  partition-column IN-list, so Spark prunes at planning time
-  (PartitionFilters in the scan node; asserted in tests/test_plans).
-- ``build_ivf_index``: assign every vector to its nearest-centroid
-  cell once, write partitioned by cell, and persist the centroids as
-  a parquet artifact next to the table. A probe reads the centroid
-  artifact (bounded: n_centroids rows), picks the ``n_probe`` nearest
-  cells on the driver, and scans only those partitions.
+    kind            partitioner  rotation  codec      table columns
+    lsh             bucket       -         float      id, vec, meta...
+    ivf             cell         -         float      id, vec, meta...
+    ivfpq           cell         -         pq         id, pq_codes, pq_code
+    sq8             -            -         sq8        id, mn, sc, sq8_code
+    ivfsq8          cell         -         sq8        id, mn, sc, sq8_code
+    prefix          -            -         prefix     id, prefix, rest
+    rotated_prefix  -            yes       rotprefix  id, vec, rot
+    opq             -            yes       pq         id, pq_codes, pq_code
+    ivfopq          cell         yes       pq         id, pq_codes, pq_code
 
-At 100 TB the build is one pass over the corpus (map-only sketch /
-one Arrow GEMM per batch) plus a partitioned write; every subsequent
-query touches buckets/cells totalling a few percent of the data and
-never recomputes hyperplanes, centroids, or assignments. Rebuilds are
-explicit (mode=overwrite), not implicit per query.
+One generic core serves all nine: ``build`` (train artifacts, write
+them, write the encoded table partitioned by the partitioner column),
+``append`` (encode a delta against the frozen artifacts; fenced when
+given a ``batch_id``), ``probe`` and ``probe_batch``. The per-kind
+``build_*_index`` / ``append_*_index`` / ``*_probe`` names are thin
+aliases with the historical signatures.
 
-Incremental maintenance (the reference's daily-rotation contract,
-/root/reference/README.md:30, applied to the vector side): new
-documents arrive continuously, and a full rebuild per refresh is
-untenable at 100 TB. ``append_lsh_index`` / ``append_ivf_index``
-ingest a delta by writing its rows into the EXISTING bucket/cell
-partition directories — legal because the assignment functions are
-frozen: LSH planes are a pure function of (dim, n_bits, seed) and IVF
-assigns against the persisted centroid artifact, so a vector's
-partition never depends on when it was ingested, and a probe over
-(base + deltas) is value-identical to a probe over a fresh full build
-(the catalog proves this through the driver oracle: the appended
-entries share the full-corpus oracle SQL). Every build/append/compact/
-merge records a version row in ``_manifest.jsonl`` so operators can
-audit segment lineage; appends accumulate small files per partition,
-which ``compact_index`` folds back to ``files_per_partition`` files
-per directory without touching assignment. STREAMING appends
-(streaming/vectors.py) land in a manifest-fenced delta area instead
-(``append_ivf_index_fenced``); probes union base + committed delta
-(``_index_rows``), and ``merge_index_delta`` folds the committed
-delta back into the base under one atomic directory swap.
+Partitioners. ``bucket``: packed sign bits against ``n_bits`` seeded
+hyperplanes — a pure function of (dim, n_bits, seed), so nothing is
+persisted and the manifest records ``dim``; a probe reads the buckets
+within Hamming distance ``multiprobe_bits`` of the query's (keep
+n_bits <= ~12: 2^n_bits directories). ``cell``: nearest (cosine) of
+the persisted centroids — the ``n_centroids`` lowest-id vectors,
+optionally k-means refined (``refine_iters``; off in the catalog
+because float-mean jitter can flip boundary assignments across runs);
+a probe ranks the centroids on the driver and reads the ``n_probe``
+nearest cells. Either way the probe filter is a partition-column
+IN-list, so Spark prunes at planning time (PartitionFilters in the
+scan node; asserted in tests). The build is one pass over the corpus
+(map-only sketch / one Arrow GEMM per batch) plus a partitioned write;
+probes touch buckets/cells totalling a few percent of the data.
 
-Reference parity: the reference delegates vector search entirely to
-its search backend; this is the Spark-native equivalent of building
-that backend's index files (SURVEY.md §2 X3).
+Codecs. ``float`` stores the vector and scores exact cosine
+(knn_brute_force); ``meta_cols`` ride along for FILTERED search: a
+``candidate_filter`` over them lands in the pruned scan
+(PushedFilters) and drops candidates before scoring — raise
+``n_probe`` under selective filters to hold recall. ``sq8`` stores
+per-vector (min, scale) int8 codes, binary-only on disk and unpacked
+in-plan (similarity.sq8_unpack); the quantizer is data-independent.
+``pq`` stores m-byte product-quantization codes scored by asymmetric
+distance (pq.pq_adc_topk: ``adc_dist`` ascending); ``train_iters=0``
+keeps the seeded data-independent codebooks, the DuckDB-replayable
+certification form. ``prefix`` / ``rotprefix`` split the vector for
+two-stage retrieval: the coarse stage scans only (id, prefix) or
+(id, rot) and keeps a ``shortlist`` by rounded cosine, the refine
+stage re-reads the shortlist ids (IN-list over id-sorted files: row
+group pruning) and re-ranks by exact full-dim cosine — bit-identical
+to similarity.knn_prefix_refine(_rotated), so the persisted path
+inherits the scan path's oracle. OPQ kinds need a full-rank rotation
+(already row-permuted: pass ``R[pq.opq_interleave_perm(dim, m)]``):
+ADC distances live in the rotated space, and an orthonormal rotation
+keeps cosine cells and L2 distances unchanged up to the round-6 grid.
+
+Frozen artifacts. Centroids, codebooks and the rotation are trained
+once per build and persisted next to the table (``centroids/``,
+``codebooks/``, ``rotation/``). Appends and probes read them back and
+never retrain: recomputing any of them from a grown corpus would
+re-key every stored row. A vector's partition and code therefore
+never depend on when it was ingested, and a probe over (base +
+deltas) equals a fresh full build whenever that build would pick the
+same artifacts (the catalog's ``*_appended`` entries certify this
+through the driver oracle). Drift under heavy append is an explicit
+rebuild decision; the manifest's append/build ratio is the signal.
+
+Maintenance (the reference's daily-rotation contract, its
+README.md:30, applied to the vector side). Every
+build/append/compact/merge records a version row in
+``_manifest.jsonl`` so operators can audit segment lineage. Unfenced
+appends write into the EXISTING partition directories, and
+``compact_index`` folds their small files back to
+``files_per_partition`` per directory without touching assignment.
+STREAMING appends (streaming/vectors.py) land in a manifest-fenced
+delta area instead; probes union base + committed delta
+(``_index_rows``), and ``merge_index_delta`` (local-FS directory swap)
+or ``compact_index_delta`` (marker-native, object-store-safe) fold
+the delta back.
 """
 
 from __future__ import annotations
@@ -56,20 +92,35 @@ import os
 import shutil
 from itertools import combinations
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from unified_log_aggregation_and_analytics_spark.functions.vectors import cosine_similarity
+from unified_log_aggregation_and_analytics_spark.operators.pq import (
+    pq_adc_topk,
+    pq_encode,
+    train_pq_codebooks,
+)
 from unified_log_aggregation_and_analytics_spark.operators.similarity import (
     deterministic_centroids,
     ivf_assign,
+    kmeans_refine,
     knn_brute_force,
     lsh_planes,
+    rotate_project,
     sign_sketch,
+    sq8_encode,
+    sq8_score_topk,
+    sq8_unpack,
 )
 from unified_log_aggregation_and_analytics_spark.sources.batch import cached, file_stamp
+from unified_log_aggregation_and_analytics_spark.streaming import fence
+
+VEC, ID = "embedding", "vec_id"
 
 
 def _table_path(path: str) -> str:
@@ -219,10 +270,6 @@ def _index_rows(
     return base.unionByName(delta.drop(fence.BATCH_COL).select(*base.columns))
 
 
-def _centroids_path(path: str) -> str:
-    return f"{path}/centroids"
-
-
 def _manifest_path(path: str) -> str:
     return f"{path}/_manifest.jsonl"
 
@@ -290,8 +337,6 @@ def _write_artifact(spark: SparkSession, rows, schema: str, path: str) -> None:
         .parquet(path)
     )
 
-
-
 def _finalize_build(
     spark: SparkSession,
     path: str,
@@ -332,13 +377,14 @@ def manifest_schema(path: str):
     return st
 
 
+def _manifest_int(path: str, key: str) -> int | None:
+    return next((int(e[key]) for e in read_manifest(path) if key in e), None)
+
+
 def manifest_dim(path: str) -> int | None:
     """Vector dimensionality recorded by the index build, or None for
     a pre-manifest index."""
-    for entry in read_manifest(path):
-        if "dim" in entry:
-            return int(entry["dim"])
-    return None
+    return _manifest_int(path, "dim")
 
 
 def _peek_dim(df: DataFrame, vec_col: str) -> int:
@@ -353,77 +399,535 @@ def _peek_dim(df: DataFrame, vec_col: str) -> int:
     return len(row[0][0])
 
 
-def build_lsh_index(
+def load_centroids(spark: SparkSession, path: str, vec_col: str = "embedding") -> np.ndarray:
+    """Read the persisted centroid artifact (n_centroids rows); cached
+    per manifest version, returned as a copy."""
+
+    def load() -> np.ndarray:
+        rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+        return np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64)
+
+    return cached(spark, ("ann_centroids", path, vec_col), _manifest_stamp(path), load).copy()
+
+
+def load_codebooks(spark: SparkSession, path: str) -> np.ndarray:
+    """Read the persisted PQ codebook artifact -> (m, codes, sub_dim);
+    cached per manifest version, returned as a copy."""
+
+    def load() -> np.ndarray:
+        rows = spark.read.parquet(f"{path}/codebooks").orderBy("mi", "ci").collect()
+        m = max(r["mi"] for r in rows) + 1
+        codes = max(r["ci"] for r in rows) + 1
+        sub_dim = len(rows[0]["codeword"])
+        out = np.zeros((m, codes, sub_dim), dtype=np.float64)
+        for r in rows:
+            out[r["mi"], r["ci"]] = list(r["codeword"])
+        return out
+
+    return cached(spark, ("ann_codebooks", path), _manifest_stamp(path), load).copy()
+
+
+def load_rotation(spark: SparkSession, path: str) -> np.ndarray:
+    """Read the persisted rotation artifact (n_components rows); cached
+    per manifest version, returned as a copy."""
+
+    def load() -> np.ndarray:
+        rows = spark.read.parquet(f"{path}/rotation").orderBy("comp").collect()
+        return np.asarray([list(r["direction"]) for r in rows], dtype=np.float64)
+
+    return cached(spark, ("ann_rotation", path), _manifest_stamp(path), load).copy()
+
+
+def manifest_prefix_dim(path: str) -> int | None:
+    """prefix_dim recorded by a prefix or rotated-prefix build, or None."""
+    return _manifest_int(path, "prefix_dim")
+
+
+def _sq8_dim(path: str, query_vec: list[float]) -> int:
+    """Code width for unpacking a binary-only SQ8 table: the build
+    manifest records it; a pre-manifest index falls back to the
+    query's own dimensionality (probe and codes must agree anyway)."""
+    dim = manifest_dim(path)
+    return int(dim) if dim is not None else len(query_vec)
+
+
+# --- the kind table ----------------------------------------------------
+
+
+class IndexSpec(NamedTuple):
+    part: str | None  # partition column: None, "bucket" (LSH) or "cell" (IVF)
+    codec: str  # "float", "sq8", "pq", "prefix" or "rotprefix"
+    rotated: bool = False  # frozen rotation in front of partitioner and codec
+
+
+KINDS = {
+    "lsh": IndexSpec("bucket", "float"),
+    "ivf": IndexSpec("cell", "float"),
+    "ivfpq": IndexSpec("cell", "pq"),
+    "sq8": IndexSpec(None, "sq8"),
+    "ivfsq8": IndexSpec("cell", "sq8"),
+    "prefix": IndexSpec(None, "prefix"),
+    "rotated_prefix": IndexSpec(None, "rotprefix", rotated=True),
+    "opq": IndexSpec(None, "pq", rotated=True),
+    "ivfopq": IndexSpec("cell", "pq", rotated=True),
+}
+
+_ARTIFACT_SCHEMAS = {
+    "rotation": "comp int, direction array<double>",
+    "centroids": "cell int, {vec_col} array<double>",
+    "codebooks": "mi int, ci int, codeword array<double>",
+}
+
+
+def _rotated(df: DataFrame, R: np.ndarray, vec_col: str, id_col: str) -> DataFrame:
+    """(id, vec) in the rotated space: the frame OPQ kinds partition and
+    encode."""
+    return rotate_project(df, R, vec_col=vec_col, id_col=id_col).select(
+        id_col, F.col("rot").alias(vec_col)
+    )
+
+
+def _encode(
+    spec: IndexSpec,
     df: DataFrame,
-    path: str,
+    art: dict,
+    vec_col: str = VEC,
+    id_col: str = ID,
+    meta_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one row transform of every build and append: rotation, then
+    partitioner, then codec, all against the frozen artifacts ``art``.
+    Map-only (Arrow passes fused into the scan); nothing shuffles."""
+    if spec.codec == "prefix":
+        pd_, dim = art["prefix_dim"], art["dim"]
+        x = df.select(
+            id_col,
+            F.slice(F.col(vec_col), 1, pd_).alias("prefix"),
+            F.slice(F.col(vec_col), pd_ + 1, dim - pd_).alias("rest"),
+        )
+    elif spec.codec == "rotprefix":
+        # the original vector rides through for the exact refine stage
+        x = rotate_project(df, art["rotation"], vec_col=vec_col, id_col=id_col)
+    elif spec.rotated:
+        x = _rotated(df, art["rotation"], vec_col, id_col)
+    else:
+        x = df.select(id_col, vec_col, *meta_cols)
+    if spec.part == "bucket":
+        x = x.withColumn("bucket", sign_sketch(vec_col, art["planes"]))
+    elif spec.part == "cell":
+        x = ivf_assign(x, art["centroids"], vec_col)
+    keep = (spec.part,) if spec.part else ()
+    if spec.codec == "pq":
+        return pq_encode(x, art["codebooks"], vec_col=vec_col, id_col=id_col, passthrough=keep)
+    if spec.codec == "sq8":
+        # binary-only on disk; probes unpack in-plan
+        return sq8_encode(x, vec_col=vec_col, id_col=id_col, passthrough=keep).drop("sq8_codes")
+    if spec.codec != "float":
+        # id-sorted files: the refine stage's shortlist IN-list prunes
+        # row groups via footer min/max
+        x = x.sortWithinPartitions(id_col)
+    return x
+
+
+def _train(
+    spec: IndexSpec,
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    dim: int | None = None,
     n_bits: int = 8,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    meta_cols: tuple[str, ...] = (),
-) -> None:
-    """One-pass LSH index build: bucket = packed sign bits of the
-    vector against ``n_bits`` seeded hyperplanes; table written
-    partitioned by bucket. The planes are a pure function of
-    (dim, n_bits, seed), so probes regenerate them instead of loading
-    an artifact — there is nothing data-dependent to persist; ``dim``
-    is recorded in the manifest so appends never scan for it.
-
-    The sketch is a map-only projection (fused into the scan); the
-    write shuffles nothing — each task writes its rows into per-bucket
-    files. 2^n_bits directories; keep n_bits ≤ ~12 so the partition
-    count stays object-store-friendly.
-    """
+    n_centroids: int = 16,
+    refine_iters: int = 0,
+    m: int = 4,
+    codes: int = 8,
+    train_iters: int = 0,
+    prefix_dim: int = 16,
+    rotation: np.ndarray | None = None,
+) -> dict:
+    """Every artifact a build freezes: rotation, centroids (trained in
+    the rotated space when there is one), codebooks, LSH planes, dim
+    and prefix_dim."""
+    art: dict = {}
+    src = df
+    if spec.rotated:
+        R = art["rotation"] = np.asarray(rotation, dtype=np.float64)
+        n_comp, dim = R.shape
+        if spec.codec == "pq":
+            if n_comp != dim:
+                raise ValueError(
+                    f"OPQ needs a full-rank rotation (got {n_comp} x {dim}): "
+                    "ADC distances live in the rotated space, so dropping "
+                    "components silently drops distance mass"
+                )
+            src = _rotated(df, R, vec_col, id_col)
+        else:
+            art["prefix_dim"] = n_comp
+    if spec.part == "cell":
+        c = deterministic_centroids(src, n_centroids, vec_col, id_col)
+        if refine_iters > 0:
+            c = kmeans_refine(src, c, n_iter=refine_iters, vec_col=vec_col)
+        art["centroids"] = c
+        dim = int(c.shape[1])
     if dim is None:
         dim = _peek_dim(df, vec_col)
-    planes = lsh_planes(dim, n_bits, seed)
-    (
-        df.select(id_col, vec_col, *meta_cols)
-        .withColumn("bucket", sign_sketch(vec_col, planes))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(df.sparkSession, path, dim=dim)
+    art["dim"] = dim
+    if spec.part == "bucket":
+        art["planes"] = lsh_planes(dim, n_bits, seed)
+    if spec.codec == "pq":
+        # n_iter=0 returns the seeded codebooks without a Spark job
+        art["codebooks"] = train_pq_codebooks(
+            src.select(id_col, vec_col), dim, m=m, codes=codes, n_iter=train_iters,
+            seed=seed, vec_col=vec_col,
+        )
+    if spec.codec == "prefix":
+        if not 0 < prefix_dim < dim:
+            raise ValueError(f"prefix_dim must be in (0, {dim}): {prefix_dim}")
+        art["prefix_dim"] = prefix_dim
+    return art
 
 
-def append_lsh_index(
-    df_new: DataFrame,
+def _write_artifacts(spark: SparkSession, path: str, art: dict, vec_col: str) -> None:
+    """The one artifact writer: rotation, centroids and codebooks, each
+    at ``<path>/<name>`` in the schema its loader reads."""
+    for name, schema in _ARTIFACT_SCHEMAS.items():
+        a = art.get(name)
+        if a is None:
+            continue
+        if name == "codebooks":
+            rows = [
+                (mi, ci, [float(x) for x in a[mi, ci]])
+                for mi in range(a.shape[0])
+                for ci in range(a.shape[1])
+            ]
+        else:
+            rows = [(i, [float(x) for x in r]) for i, r in enumerate(a)]
+        _write_artifact(spark, rows, schema.format(vec_col=vec_col), f"{path}/{name}")
+
+
+def _load_artifacts(
+    spark: SparkSession,
+    spec: IndexSpec,
     path: str,
+    df: DataFrame,
+    vec_col: str,
     n_bits: int = 8,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int | None = None,
+) -> dict:
+    """The frozen artifacts an append encodes against, through the
+    cached loaders. LSH planes are regenerated from the manifest's dim
+    (a delta scan for it is the pre-manifest fallback only), so an
+    empty delta plans no job."""
+    art: dict = {"dim": dim}
+    if spec.rotated:
+        art["rotation"] = load_rotation(spark, path)
+    if spec.part == "cell":
+        art["centroids"] = load_centroids(spark, path, vec_col)
+    if spec.codec == "pq":
+        art["codebooks"] = load_codebooks(spark, path)
+    if spec.part == "bucket":
+        art["dim"] = dim or manifest_dim(path) or _peek_dim(df, vec_col)
+        art["planes"] = lsh_planes(art["dim"], n_bits, seed)
+    if spec.codec == "prefix":
+        art["prefix_dim"], art["dim"] = manifest_prefix_dim(path), manifest_dim(path)
+        if art["prefix_dim"] is None or art["dim"] is None:
+            raise ValueError(f"index at {path!r} has no prefix-split manifest")
+    return art
+
+
+def _write(df: DataFrame, path: str, mode: str, part: str | None) -> None:
+    w = df.write.mode(mode)
+    (w.partitionBy(part) if part else w).parquet(path)
+
+
+# --- generic build / append -------------------------------------------
+
+
+def build(
+    kind: str,
+    df: DataFrame,
+    path: str,
+    vec_col: str = VEC,
+    id_col: str = ID,
     meta_cols: tuple[str, ...] = (),
+    **params,
 ) -> None:
-    """Incremental LSH ingest: sketch ONLY the delta with the same
-    (dim, n_bits, seed)-derived planes the base build used and append
-    its rows into the existing per-bucket partition directories. No
-    base rows are read or rewritten — delta cost is O(|delta|), not
-    O(|index|) — and because the plane set is a pure function of the
-    build parameters, (base + delta) is row-identical to a fresh full
-    build over the union (catalog entry knn_ann_lsh_appended certifies
-    this against the full-corpus oracle). ``dim`` comes from the build
-    manifest, so an idle-trigger EMPTY delta is a clean no-op rather
-    than a crash, and no job runs against the delta to plan the
-    append. Records an ``append`` manifest version; run
-    ``compact_index`` periodically to fold the per-append small
-    files."""
-    if dim is None:
-        dim = manifest_dim(path)
-    if dim is None:
-        dim = _peek_dim(df_new, vec_col)  # pre-manifest index only
-    planes = lsh_planes(dim, n_bits, seed)
-    delta = df_new.select(id_col, vec_col, *meta_cols).withColumn(
-        "bucket", sign_sketch(vec_col, planes)
-    )
-    delta.write.mode("append").partitionBy("bucket").parquet(_table_path(path))
+    """Build the ``kind`` index of ``df`` at ``path`` (mode=overwrite):
+    train and persist the artifacts, write the encoded table partitioned
+    by the kind's partitioner, reset the manifest. ``params`` are the
+    ``_train`` knobs (n_bits, seed, dim, n_centroids, refine_iters, m,
+    codes, train_iters, prefix_dim, rotation)."""
+    spec = KINDS[kind]
+    spark = df.sparkSession
+    art = _train(spec, df, vec_col, id_col, **params)
+    _write_artifacts(spark, path, art, vec_col)
+    enc = _encode(spec, df, art, vec_col, id_col, meta_cols)
+    _write(enc, _table_path(path), "overwrite", spec.part)
+    # IVF manifests have never recorded dim (readers fall back to the
+    # centroid width); kept so the manifest layout stays as it was
+    dim = None if kind == "ivf" else art["dim"]
+    _finalize_build(spark, path, dim=dim, prefix_dim=art.get("prefix_dim"))
+
+
+def append(
+    kind: str,
+    df_new: DataFrame,
+    path: str,
+    batch_id: int | None = None,
+    vec_col: str = VEC,
+    id_col: str = ID,
+    meta_cols: tuple[str, ...] = (),
+    **params,
+) -> None:
+    """Encode ``df_new`` against the index's frozen artifacts and add it.
+
+    Unfenced (``batch_id=None``): rows land in the EXISTING partition
+    directories of the base table — O(|delta|), base files untouched —
+    and an ``append`` manifest version records the row count (an
+    Observation on the write: no separate count job) and the fence
+    position (snapshot ordering, see ``_index_rows``). An empty delta
+    records ``rows: 0``.
+
+    Fenced (``batch_id`` given, streaming/vectors.py): rows land in the
+    fenced delta area under ``_commit_batch=<id>``; a replay replaces
+    its own torn rows, probes see the batch only after its shared
+    commit marker, and ``as_of_batch`` pins stay sound because fenced
+    batches keep per-batch lineage (the unfenced path has none).
+    ``params``: n_bits, seed, dim (LSH only)."""
+    spec = KINDS[kind]
+    spark = df_new.sparkSession
+    _check_layout(kind, spec, path)
+    art = _load_artifacts(spark, spec, path, df_new, vec_col, **params)
+    enc = _encode(spec, df_new, art, vec_col, id_col, meta_cols)
+    if batch_id is not None:
+        fence.fenced_append(enc, _delta_path(path), batch_id, (spec.part,) if spec.part else ())
+        return
+    obs = Observation()
+    enc = enc.observe(obs, F.count(F.lit(1)).alias("rows"))
+    _write(enc, _table_path(path), "append", spec.part)
     _record_version(
-        path, "append", df_new.count(), dim=dim,
-        fence_pos=_fence_pos(df_new.sparkSession, path),
+        path, "append", obs.get["rows"],
+        dim=art["dim"] if spec.part == "bucket" else None,
+        fence_pos=_fence_pos(spark, path),
     )
+
+
+def _check_layout(kind: str, spec: IndexSpec, path: str) -> None:
+    """Refuse an append whose partitioner differs from the index's:
+    its rows would land unassigned and invisible to pruned probes."""
+    st = manifest_schema(path)
+    have = next((c for c in ("bucket", "cell") if st is not None and c in st.names), None)
+    if st is not None and have != spec.part:
+        other = next((k for k, s in KINDS.items() if s == spec._replace(part=have)), "a matching")
+        raise ValueError(
+            f"append_{kind}_index called on an index at {path!r} partitioned "
+            f"by {have!r} — use append_{other}_index, or rows land "
+            "unassigned and invisible to partition-pruned probes"
+        )
+
+
+# --- generic probe -----------------------------------------------------
+
+
+def _prober(
+    spark: SparkSession,
+    spec: IndexSpec,
+    path: str,
+    dim: int,
+    vec_col: str = VEC,
+    n_probe: int = 4,
+    n_bits: int = 8,
+    seed: int = 42,
+    multiprobe_bits: int = 1,
+):
+    """Driver-side candidate selection: a function from a query vector
+    (in the index's space) to the partition keys a probe reads."""
+    if spec.part == "bucket":
+        planes = lsh_planes(dim, n_bits, seed)
+
+        def keys(vec) -> list[int]:
+            # the query's bucket, then every bucket within
+            # multiprobe_bits flips of it
+            q = np.asarray(vec, dtype=np.float64)
+            qb = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ q) > 0))
+            out = [qb]
+            for d in range(1, multiprobe_bits + 1):
+                out += [qb ^ sum(1 << b for b in bits) for bits in combinations(range(n_bits), d)]
+            return out
+
+        return keys
+    centroids = load_centroids(spark, path, vec_col)
+    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+
+    def keys(vec) -> list[int]:
+        # the n_probe nearest cells by cosine (argsort tie order kept)
+        q = np.asarray(vec, dtype=np.float64)
+        q = q / max(np.linalg.norm(q), 1e-12)
+        return [int(c) for c in (norm @ q).argsort()[::-1][:n_probe]]
+
+    return keys
+
+
+def _rotate_query(spark: SparkSession, path: str, query_vec: list[float]) -> list[float]:
+    """The query projected through the frozen rotation, rounded like
+    rotate_project's stored coordinates."""
+    R = load_rotation(spark, path)
+    if R.shape[1] != len(query_vec):
+        raise ValueError(
+            f"query dim {len(query_vec)} != rotation dim {R.shape[1]} at {path!r}"
+        )
+    return [float(x) for x in np.round(np.asarray(query_vec, dtype=np.float64) @ R.T, 6)]
+
+
+def _refine(idx, coarse_col, q_coarse, fine_col, q_full, k, shortlist, id_col) -> DataFrame:
+    """Two-stage prefix retrieval: shortlist by rounded coarse cosine,
+    then exact full-dim cosine over the shortlist ids only."""
+    coarse = (
+        idx.select(
+            id_col,
+            F.round(
+                cosine_similarity(coarse_col, q_coarse, dim=len(q_coarse)), 6
+            ).alias("pref_sim"),
+        )
+        .orderBy(F.col("pref_sim").desc(), F.col(id_col))
+        .limit(shortlist)
+    )
+    ids = [r[0] for r in coarse.select(id_col).collect()]
+    return (
+        idx.filter(F.col(id_col).isin(ids))
+        .select(
+            id_col,
+            F.round(
+                cosine_similarity(fine_col, q_full, dim=len(q_full)), 6
+            ).alias("cos_sim"),
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
+def _sq8_codes(idx: DataFrame, dim: int, id_col: str) -> DataFrame:
+    return idx.select(id_col, "mn", "sc", sq8_unpack("sq8_code", dim).alias("sq8_codes"))
+
+
+def probe(
+    spark: SparkSession,
+    kind: str,
+    path: str,
+    query_vec: list[float],
+    k: int = 10,
+    vec_col: str = VEC,
+    id_col: str = ID,
+    candidate_filter: Column | None = None,
+    as_of_batch: int | None = None,
+    shortlist: int = 50,
+    **knobs,
+) -> DataFrame:
+    """Top-k of one query over the ``kind`` index at ``path``: read only
+    the partitions the prober selects (PartitionFilters in the scan),
+    apply ``candidate_filter`` before scoring, then score with the
+    codec's scorer — exact cosine (``cos_sim`` desc) for float and the
+    prefix codecs, ``adc_dist`` ascending for sq8 and pq. ``knobs``:
+    n_probe (cells), n_bits, seed, multiprobe_bits (buckets)."""
+    spec = KINDS[kind]
+    q = [float(x) for x in query_vec]
+    qs = _rotate_query(spark, path, q) if spec.rotated else q
+    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
+    if spec.part:
+        keys = _prober(spark, spec, path, len(qs), vec_col, **knobs)(qs)
+        idx = idx.filter(F.col(spec.part).isin(keys)).drop(spec.part)
+    if candidate_filter is not None:
+        idx = idx.filter(candidate_filter)
+    if spec.codec == "float":
+        return knn_brute_force(idx, q, k, vec_col, id_col)
+    if spec.codec == "pq":
+        return pq_adc_topk(idx, load_codebooks(spark, path), qs, k=k, id_col=id_col)
+    if spec.codec == "sq8":
+        return sq8_score_topk(_sq8_codes(idx, _sq8_dim(path, q), id_col), q, k=k, id_col=id_col)
+    if spec.codec == "rotprefix":
+        return _refine(idx, "rot", qs, vec_col, q, k, shortlist, id_col)
+    pd_, built_dim = manifest_prefix_dim(path), manifest_dim(path)
+    if pd_ is None:
+        raise ValueError(f"index at {path!r} has no prefix-split manifest")
+    if built_dim is not None and len(q) != built_dim:
+        raise ValueError(f"query dim {len(q)} != index build dim {built_dim} at {path!r}")
+    return _refine(idx, "prefix", q[:pd_], "concat(prefix, rest)", q, k, shortlist, id_col)
+
+
+def probe_batch(
+    spark: SparkSession,
+    kind: str,
+    path: str,
+    queries: list[tuple],
+    k: int = 10,
+    vec_col: str = VEC,
+    id_col: str = ID,
+    candidate_filter: Column | None = None,
+    as_of_batch: int | None = None,
+    label_col: str | None = None,
+    max_sim: float | None = None,
+    **knobs,
+) -> DataFrame:
+    """Q queries ``(q_id, vec)``, ONE partition-pruned index read (float
+    codec, bucket or cell partitioner). Keys are selected per query on
+    the driver; the union of all keys is the partition filter, each
+    candidate joins only the queries probing its partition (broadcast
+    (q_id, key) pairs), scoring is the exact cosine kernel and the
+    per-query top-k a window rank: |probed partitions| + Q x |partition|
+    work, independent of corpus size.
+
+    With ``label_col`` the queries are anchors ``(anchor_id, vec,
+    label)`` for hard-negative mining: candidates sharing the anchor's
+    label and candidates above ``max_sim`` drop before ranking, and the
+    rank is returned."""
+    spec = KINDS[kind]
+    if not queries:
+        raise ValueError(f"{kind} batch probe requires at least one query")
+    qkey = "q_id" if label_col is None else "anchor_id"
+    keys = _prober(spark, spec, path, len(queries[0][1]), vec_col, **knobs)
+    pairs: list[tuple[int, int]] = []
+    qrows = []
+    for qid, vec, *label in queries:
+        ks = keys(vec)
+        pairs.extend((qid, c) for c in (sorted(ks) if spec.part == "bucket" else ks))
+        qrows.append((qid, [float(x) for x in vec], *label))
+    ptype = "long" if spec.part == "bucket" else "int"
+    probe_df = spark.createDataFrame(pairs, f"{qkey} long, {spec.part} {ptype}")
+    qdf = spark.createDataFrame(
+        qrows, f"{qkey} long, qe array<double>" if label_col is None else [qkey, "qe", "q_label"]
+    )
+    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
+    cand = idx.filter(F.col(spec.part).isin(sorted({c for _, c in pairs})))
+    if candidate_filter is not None:
+        # applied BEFORE scoring/ranking (e.g. exclude the query set)
+        cand = cand.filter(candidate_filter)
+    sims = cand.join(F.broadcast(probe_df), spec.part).join(F.broadcast(qdf), qkey)
+    extra = []
+    if label_col is not None:
+        sims = sims.filter(F.col(label_col) != F.col("q_label"))
+        extra = [F.col(label_col)]
+    sims = sims.select(
+        qkey,
+        F.col(id_col),
+        *extra,
+        F.round(cosine_similarity(F.col(vec_col), F.col("qe")), 6).alias("cos_sim"),
+    )
+    if max_sim is not None:
+        sims = sims.filter(F.col("cos_sim") <= F.lit(max_sim))
+    rn = F.row_number().over(
+        Window.partitionBy(qkey).orderBy(F.col("cos_sim").desc(), F.col(id_col))
+    )
+    if label_col is None:
+        return sims.withColumn("rn", rn).filter(F.col("rn") <= k).select(qkey, id_col, "cos_sim")
+    return (
+        sims.withColumn("rank", rn.cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select(qkey, id_col, label_col, "cos_sim", "rank")
+    )
+
+
+# --- maintenance --------------------------------------------------------
 
 
 def compact_index(
@@ -468,289 +972,6 @@ def compact_index(
     shutil.rmtree(table)
     os.rename(tmp, table)
     _record_version(path, "compact", rows)
-
-
-def lsh_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_bits: int = 8,
-    seed: int = 42,
-    multiprobe_bits: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    candidate_filter: Column | None = None,
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Indexed ANN probe: enumerate the bucket ids within
-    ``multiprobe_bits`` of the query's bucket (driver-side, over bit
-    masks — n_bits is tiny) and read only those partitions. The plan's
-    scan node carries PartitionFilters on ``bucket``; the exact
-    brute-force kernel then scores the pruned candidates.
-
-    ``candidate_filter`` (over ``meta_cols`` the index was built
-    with) = filtered vector search, same contract and recall trade as
-    ivf_probe: push the predicate into the pruned scan, raise
-    multiprobe_bits under selective filters."""
-    planes = lsh_planes(len(query_vec), n_bits, seed)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q_bucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ q) > 0))
-    probe = [q_bucket]
-    for d in range(1, multiprobe_bits + 1):
-        for bits in combinations(range(n_bits), d):
-            flip = 0
-            for b in bits:
-                flip |= 1 << b
-            probe.append(q_bucket ^ flip)
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("bucket").isin(probe)).drop("bucket")
-    if candidate_filter is not None:
-        cand = cand.filter(candidate_filter)
-    return knn_brute_force(cand, query_vec, k, vec_col, id_col)
-
-
-def lsh_probe_batch(
-    spark: SparkSession,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 10,
-    n_bits: int = 8,
-    seed: int = 42,
-    multiprobe_bits: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    candidate_filter: Column | None = None,
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Batch ANN over the persisted LSH index — the retrieval-workload
-    shape (Q queries, one index read). Per-query probe buckets are
-    enumerated on the driver (Q x ~n_bits ids); the index is read ONCE
-    with the union of all probe buckets as the partition filter, each
-    candidate joins only the queries probing its bucket (broadcast
-    (q_id, bucket) pairs), scoring is the exact cosine kernel, and the
-    per-query top-k is a window rank. Total work: |union of buckets|
-    partitions scanned + Q x |bucket| scorings — independent of corpus
-    size."""
-    from pyspark.sql import Window
-
-    from unified_log_aggregation_and_analytics_spark.functions.vectors import (
-        cosine_similarity,
-    )
-
-    if not queries:
-        raise ValueError("lsh_probe_batch requires at least one query")
-    planes = lsh_planes(len(queries[0][1]), n_bits, seed)
-    pairs: list[tuple[int, int]] = []
-    qrows = []
-    for qid, vec in queries:
-        q = np.asarray(vec, dtype=np.float64)
-        qb = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ q) > 0))
-        buckets = {qb}
-        for d in range(1, multiprobe_bits + 1):
-            for bits in combinations(range(n_bits), d):
-                flip = 0
-                for b in bits:
-                    flip |= 1 << b
-                buckets.add(qb ^ flip)
-        pairs.extend((qid, b) for b in sorted(buckets))
-        qrows.append((qid, [float(x) for x in vec]))
-    probe_df = spark.createDataFrame(pairs, "q_id long, bucket long")
-    qdf = spark.createDataFrame(qrows, "q_id long, qe array<double>")
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("bucket").isin(sorted({b for _, b in pairs})))
-    if candidate_filter is not None:
-        # applied BEFORE scoring/ranking (e.g. exclude the query set)
-        cand = cand.filter(candidate_filter)
-    sims = (
-        cand.join(F.broadcast(probe_df), "bucket")
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id",
-            F.col(id_col),
-            F.round(cosine_similarity(F.col(vec_col), F.col("qe")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", id_col, "cos_sim")
-    )
-
-
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    refine_iters: int = 0,
-    meta_cols: tuple[str, ...] = (),
-) -> None:
-    """One-pass IVF index build: nearest-centroid cell per vector via
-    one Arrow GEMM per batch (similarity.ivf_assign), table written
-    partitioned by cell, centroids persisted as a parquet artifact —
-    probes load 16 rows, never recompute or rescan the corpus.
-
-    ``meta_cols`` carries metadata columns (label, source, date) into
-    the index rows, enabling FILTERED vector search: probes push the
-    metadata predicate into the cell-pruned scan (ivf_probe
-    ``candidate_filter``), so candidates failing the filter never
-    reach the scorer — the post-filter pattern every production
-    vector store implements. Cost: the index stores the extra
-    columns; at 100 TB keep meta_cols to the few filterable ones.
-
-    ``refine_iters`` > 0 runs spherical-k-means rounds
-    (similarity.kmeans_refine) before assignment — tighter cells mean
-    fewer probes for a given recall. Off by default in the catalog:
-    float-mean jitter across runs can flip boundary assignments, and
-    the oracle-checked entries need run-to-run determinism."""
-    centroids = deterministic_centroids(df, n_centroids, vec_col, id_col)
-    if refine_iters > 0:
-        from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-            kmeans_refine,
-        )
-
-        centroids = kmeans_refine(df, centroids, n_iter=refine_iters, vec_col=vec_col)
-    spark = df.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    _write_artifact(spark, cent_rows, f"cell int, {vec_col} array<double>", _centroids_path(path))
-    (
-        ivf_assign(df.select(id_col, vec_col, *meta_cols), centroids, vec_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(spark, path)
-
-
-def append_ivf_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    meta_cols: tuple[str, ...] = (),
-) -> None:
-    """Incremental IVF ingest: assign ONLY the delta against the
-    PERSISTED centroid artifact (frozen — never recomputed from the
-    grown corpus, which would reshuffle every existing assignment) and
-    append its rows into the existing per-cell partitions. Delta cost
-    is one Arrow GEMM pass over the delta; probe results over
-    (base + delta) equal a fresh full build whenever the fresh build
-    would pick the same centroids (catalog entry knn_ivf_appended
-    certifies this against the full-corpus oracle). Centroid drift
-    under heavy append is an explicit rebuild decision — the manifest's
-    append/build ratio is the signal."""
-    spark = df_new.sparkSession
-    centroids = load_centroids(spark, path, vec_col)
-    (
-        ivf_assign(df_new.select(id_col, vec_col, *meta_cols), centroids, vec_col)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(df_new.sparkSession, path),
-    )
-
-
-def append_ivf_index_fenced(
-    df_new: DataFrame,
-    path: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    meta_cols: tuple[str, ...] = (),
-) -> None:
-    """Streaming twin of append_ivf_index: the delta lands in the
-    index's fenced delta area under ``_commit_batch=<id>`` with
-    dynamic partition overwrite, so a checkpoint replay REPLACES the
-    batch's own torn rows instead of duplicating them, and probes
-    (through ``_index_rows``) see the batch only after its shared
-    commit marker lands (streaming/fence.py). Assignment is identical
-    (frozen centroid artifact); the fence markers are the delta's
-    version manifest."""
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
-    spark = df_new.sparkSession
-    centroids = load_centroids(spark, path, vec_col)
-    fence.fenced_append(
-        ivf_assign(df_new.select(id_col, vec_col, *meta_cols), centroids, vec_col),
-        _delta_path(path),
-        batch_id,
-        ("cell",),
-    )
-
-
-def append_ivfpq_index_fenced(
-    df_new: DataFrame,
-    path: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Streaming twin of append_ivfpq_index (r14): the encoded delta
-    lands in the fenced delta area under ``_commit_batch=<id>`` with
-    dynamic partition overwrite — replays replace their own torn
-    rows, probes see the batch only after the commit marker lands,
-    and snapshot-pinned probes (``as_of_batch``) stay SOUND because
-    fenced batches carry per-batch lineage (the unfenced append path
-    deliberately breaks pins, _index_rows raises). Assignment and
-    encode run against the FROZEN centroid/codebook artifacts — the
-    build_ivfpq_index contract."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_encode
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        ivf_assign,
-    )
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
-    spark = df_new.sparkSession
-    centroids = load_centroids(spark, path, vec_col)
-    cb = load_codebooks(spark, path)
-    assigned = ivf_assign(df_new.select(id_col, vec_col), centroids, vec_col)
-    fence.fenced_append(
-        pq_encode(assigned, cb, vec_col=vec_col, id_col=id_col, passthrough=("cell",)),
-        _delta_path(path),
-        batch_id,
-        ("cell",),
-    )
-
-
-def append_ivfopq_index_fenced(
-    df_new: DataFrame,
-    path: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Streaming twin of append_ivfopq_index (r14): project through
-    the FROZEN rotation, assign against the FROZEN rotated-space
-    centroids, encode against the FROZEN codebooks, land in the
-    fenced delta area — the append_ivfpq_index_fenced contract with
-    the rotation folded in front."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_encode
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        ivf_assign,
-        rotate_project,
-    )
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
-    spark = df_new.sparkSession
-    R = load_rotation(spark, path)
-    centroids = load_centroids(spark, path, vec_col)
-    cb = load_codebooks(spark, path)
-    proj = rotate_project(df_new, R, vec_col=vec_col, id_col=id_col).select(
-        id_col, F.col("rot").alias(vec_col)
-    )
-    assigned = ivf_assign(proj, centroids, vec_col)
-    fence.fenced_append(
-        pq_encode(assigned, cb, vec_col=vec_col, id_col=id_col, passthrough=("cell",)),
-        _delta_path(path),
-        batch_id,
-        ("cell",),
-    )
 
 
 def compact_index_delta(
@@ -884,346 +1105,22 @@ def merge_index_delta(
     return folded
 
 
-def load_centroids(spark: SparkSession, path: str, vec_col: str = "embedding") -> np.ndarray:
-    """Read the persisted centroid artifact (n_centroids rows); cached
-    per manifest version, returned as a copy."""
-
-    def load() -> np.ndarray:
-        rows = spark.read.parquet(_centroids_path(path)).orderBy("cell").collect()
-        return np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64)
-
-    return cached(spark, ("ann_centroids", path, vec_col), _manifest_stamp(path), load).copy()
-
-
-def ivf_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    candidate_filter: Column | None = None,
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Indexed IVF probe: rank the persisted centroids against the
-    query on the driver (n_centroids-sized matmul), then read only the
-    ``n_probe`` nearest cells — a partition-pruned scan followed by the
-    exact scoring kernel. No assignment pass, no centroid recompute.
-
-    ``candidate_filter`` (a predicate over ``meta_cols`` the index was
-    built with) makes this FILTERED vector search: the predicate lands
-    in the pruned scan (PushedFilters — parquet row groups failing it
-    never decode), candidates are filtered BEFORE scoring. Under a
-    selective filter the probed cells hold fewer qualifying
-    candidates, so raise ``n_probe`` to hold recall — the standard
-    filtered-ANN trade; at filter selectivities below ~1/n_cells,
-    partition the index BY the filter column instead and run an exact
-    scan inside the slice."""
-    centroids = load_centroids(spark, path, vec_col)
-    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(c) for c in (norm @ q).argsort()[::-1][:n_probe]]
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("cell").isin(probe_cells)).drop("cell")
-    if candidate_filter is not None:
-        cand = cand.filter(candidate_filter)
-    return knn_brute_force(cand, query_vec, k, vec_col, id_col)
-
-
-def ivf_probe_batch(
-    spark: SparkSession,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    candidate_filter: Column | None = None,
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Batch IVF retrieval over the persisted index — Q queries, ONE
-    index read. Centroid ranking happens on the driver (Q × n_centroids
-    matmul against the 16-row persisted artifact); the union of all
-    probed cells becomes the partition filter, each candidate scores
-    only against the queries probing its cell (broadcast (q_id, cell)
-    pairs), and the per-query top-k is a window rank. Work scales with
-    |probed cells| + Q × |cell|, independent of corpus size."""
-    from pyspark.sql import Window
-
-    from unified_log_aggregation_and_analytics_spark.functions.vectors import (
-        cosine_similarity,
-    )
-
-    if not queries:
-        raise ValueError("ivf_probe_batch requires at least one query")
-    centroids = load_centroids(spark, path, vec_col)
-    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    pairs: list[tuple[int, int]] = []
-    qrows = []
-    for qid, vec in queries:
-        q = np.asarray(vec, dtype=np.float64)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        cells = [int(c) for c in (norm @ q).argsort()[::-1][:n_probe]]
-        pairs.extend((qid, c) for c in cells)
-        qrows.append((qid, [float(x) for x in vec]))
-    probe_df = spark.createDataFrame(pairs, "q_id long, cell int")
-    qdf = spark.createDataFrame(qrows, "q_id long, qe array<double>")
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("cell").isin(sorted({c for _, c in pairs})))
-    if candidate_filter is not None:
-        cand = cand.filter(candidate_filter)
-    sims = (
-        cand.join(F.broadcast(probe_df), "cell")
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id",
-            F.col(id_col),
-            F.round(cosine_similarity(F.col(vec_col), F.col("qe")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", id_col, "cos_sim")
-    )
-
-
-# --- IVF-PQ: compressed cells (the FAISS IVFPQ architecture) ----------
-
-
-def _codebooks_path(path: str) -> str:
-    return f"{path}/codebooks"
-
-
-def load_codebooks(spark: SparkSession, path: str) -> np.ndarray:
-    """Read the persisted PQ codebook artifact -> (m, codes, sub_dim);
-    cached per manifest version, returned as a copy."""
-
-    def load() -> np.ndarray:
-        rows = spark.read.parquet(_codebooks_path(path)).orderBy("mi", "ci").collect()
-        m = max(r["mi"] for r in rows) + 1
-        codes = max(r["ci"] for r in rows) + 1
-        sub_dim = len(rows[0]["codeword"])
-        out = np.zeros((m, codes, sub_dim), dtype=np.float64)
-        for r in rows:
-            out[r["mi"], r["ci"]] = list(r["codeword"])
-        return out
-
-    return cached(spark, ("ann_codebooks", path), _manifest_stamp(path), load).copy()
-
-
-def build_ivfpq_index(
-    df: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    m: int = 4,
-    codes: int = 8,
-    train_iters: int = 2,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """IVF-PQ index build (the two-level FAISS shape, Jégou et al.
-    TPAMI'11): coarse IVF cells bound WHERE a probe reads, PQ codes
-    bound HOW MUCH it reads — the persisted table stores ONLY
-    ``(id, pq_codes, pq_code)`` partitioned by cell. At dim=64/float32
-    with m=4 that is a ~64x smaller index than the raw-vector IVF
-    table; a probe touches n_probe/n_centroids of it.
-
-    Build = one centroid pass (deterministic seed centroids), one PQ
-    training run (Lloyd via Spark aggs, rounded means), then a single
-    mapInPandas pass that assigns the cell AND encodes the codes per
-    Arrow batch. Centroids and codebooks persist as parquet
-    artifacts; probes load (n_centroids + m*codes) rows, never the
-    corpus."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import (
-        pq_encode,
-        train_pq_codebooks,
-    )
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        deterministic_centroids,
-        ivf_assign,
-    )
-
-    centroids = deterministic_centroids(df, n_centroids, vec_col, id_col)
-    dim = centroids.shape[1]
-    codebooks = train_pq_codebooks(
-        df.select(id_col, vec_col), dim, m=m, codes=codes, n_iter=train_iters, seed=seed
-    )
-    spark = df.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    _write_artifact(spark, cent_rows, f"cell int, {vec_col} array<double>", _centroids_path(path))
-    cb_rows = [
-        (mi, ci, [float(x) for x in codebooks[mi, ci]])
-        for mi in range(m)
-        for ci in range(codes)
-    ]
-    _write_artifact(spark, cb_rows, "mi int, ci int, codeword array<double>", _codebooks_path(path))
-    assigned = ivf_assign(df.select(id_col, vec_col), centroids, vec_col)
-    (
-        pq_encode(assigned, codebooks, vec_col=vec_col, id_col=id_col, passthrough=("cell",))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(spark, path, dim=dim)
-
-
-def append_ivfpq_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental IVF-PQ ingest: the delta is assigned and encoded
-    against the FROZEN persisted centroids and codebooks (recomputing
-    either would silently re-key existing rows) and appended into the
-    per-cell partitions — one Arrow pass over the delta. Quantizer
-    drift under heavy append is a rebuild decision; the manifest's
-    append/build ratio is the signal."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_encode
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        ivf_assign,
-    )
-
-    if df_new.isEmpty():
-        return
-    spark = df_new.sparkSession
-    centroids = load_centroids(spark, path, vec_col)
-    codebooks = load_codebooks(spark, path)
-    assigned = ivf_assign(df_new.select(id_col, vec_col), centroids, vec_col)
-    (
-        pq_encode(assigned, codebooks, vec_col=vec_col, id_col=id_col, passthrough=("cell",))
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(df_new.sparkSession, path),
-    )
-
-
-def ivfpq_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """IVF-PQ probe: rank the persisted centroids driver-side, read
-    only the ``n_probe`` nearest CODE partitions (PartitionFilters on
-    ``cell``; the scan moves m bytes per row, never floats), and
-    score by asymmetric distance — the query's (m x codes) lookup
-    table embedded as literals, whole-stage codegen, top-k by
-    TakeOrderedAndProject. Returns approximate squared-L2 distances
-    (``adc_dist`` ascending)."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_adc_topk
-
-    centroids = load_centroids(spark, path)
-    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(c) for c in (norm @ qn).argsort()[::-1][:n_probe]]
-    codebooks = load_codebooks(spark, path)
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("cell").isin(probe_cells)).drop("cell")
-    return pq_adc_topk(cand, codebooks, list(query_vec), k=k, id_col=id_col)
-
-
-def build_sq8_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """SQ8 index build — the int8 storage-compression play (Lucene's
-    scalar-quantized vector format) without a pruning structure: the
-    persisted table stores ``(id, mn, sc, sq8_code binary)`` and NO
-    float vectors — BINARY-ONLY since r12 (the former dual
-    array<int>+binary layout cost ~2x the bytes in parquet offsets;
-    probes unpack in-plan via similarity.sq8_unpack). The probe
-    stays a shuffle-free map + TakeOrderedAndProject over the whole
-    table — SQ8 shrinks HOW MUCH a scan reads, IVF bounds WHERE it
-    reads, and the two compose (partition this table by cell exactly
-    like build_ivfpq_index does for PQ codes). One Arrow encode pass
-    (similarity.sq8_encode); a manifest version records the build."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        sq8_encode,
-    )
-
-    dim = _peek_dim(df, vec_col)
-    (
-        sq8_encode(df, vec_col=vec_col, id_col=id_col)
-        .drop("sq8_codes")  # binary-only on disk; probes unpack in-plan
-        .write.mode("overwrite")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(df.sparkSession, path, dim=dim)
-
-
-def append_sq8_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental SQ8 ingest: per-vector (min, scale) pairs make the
-    quantizer data-INDEPENDENT across rows — unlike IVF/PQ there is
-    no frozen model to drift, so an append is just the encode pass
-    over the delta. The manifest records it."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        sq8_encode,
-    )
-
-    if df_new.isEmpty():
-        return
-    if "cell" in df_new.sparkSession.read.parquet(_table_path(path)).columns:
-        raise ValueError(
-            "append_sq8_index called on a cell-partitioned (IVF-SQ8) "
-            "index — use append_ivfsq8_index, or rows land unassigned "
-            "and invisible to cell-pruned probes"
-        )
-    (
-        sq8_encode(df_new, vec_col=vec_col, id_col=id_col)
-        .drop("sq8_codes")
-        .write.mode("append")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(df_new.sparkSession, path),
-    )
-
-
 def sq8_probe_batch(
     spark: SparkSession,
     path: str,
     queries: list[tuple[int, list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
+    id_col: str = ID,
     exclude_ids: tuple[int, ...] = (),
     as_of_batch: int | None = None,
 ) -> DataFrame:
-    """Batch retrieval over the persisted SQ8 index — the
-    retrieval-workload shape (Q queries, ONE compressed index read).
-    The Q float queries broadcast; every index partition reconstructs
-    ``mn + code * sc`` once per (row, query) inside the distance fold
-    (Q x N distances never hit disk), then a per-query window rank
-    keeps k — the knn_batch plan over codes instead of floats.
-    ``exclude_ids`` drops the query vectors themselves from the
-    candidate set (the knn_batch convention)."""
-    from pyspark.sql import Window
-
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        sq8_unpack,
-    )
-
+    """Batch retrieval over the persisted SQ8 index — Q queries, ONE
+    compressed index read. The Q float queries broadcast; every index
+    partition reconstructs ``mn + code * sc`` once per (row, query)
+    inside the distance fold (Q x N distances never hit disk), then a
+    per-query window rank keeps k — the knn_batch plan over codes
+    instead of floats. ``exclude_ids`` drops the query vectors
+    themselves from the candidate set (the knn_batch convention)."""
     dim = _sq8_dim(path, queries[0][1]) if queries else manifest_dim(path)
     if dim is None:
         raise ValueError(
@@ -1231,12 +1128,7 @@ def sq8_probe_batch(
             "empty queries list on a pre-manifest index (pass at least "
             "one query or rebuild the index to record a manifest)"
         )
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch).select(
-        id_col,
-        "mn",
-        "sc",
-        sq8_unpack("sq8_code", dim).alias("sq8_codes"),
-    )
+    idx = _sq8_codes(_index_rows(spark, path, as_of_batch=as_of_batch), dim, id_col)
     if exclude_ids:
         idx = idx.filter(~F.col(id_col).isin(list(exclude_ids)))
     qdf = spark.createDataFrame(
@@ -1265,807 +1157,142 @@ def sq8_probe_batch(
     )
 
 
-def _sq8_dim(path: str, query_vec: list[float]) -> int:
-    """Code width for unpacking a binary-only SQ8 table: the build
-    manifest records it; a pre-manifest index falls back to the
-    query's own dimensionality (probe and codes must agree anyway)."""
-    dim = manifest_dim(path)
-    return int(dim) if dim is not None else len(query_vec)
+# --- per-kind aliases -------------------------------------------------
+# Historical names, signatures and defaults. Each forwards its own
+# arguments (``**locals()``) to the generic entry point, whose keyword
+# names match.
 
 
-def build_ivfsq8_index(
-    df: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """IVF + SQ8 composed index — the two knobs a 100 TB vector scan
-    has, composed: IVF cells bound WHERE a probe reads (partition
-    pruning), SQ8 codes bound HOW MUCH it reads per row. The
-    persisted table stores ``(id, mn, sc, sq8_code binary)``
-    partitioned by cell — BINARY-ONLY since r12 (~3x smaller on disk
-    than the former dual array+binary layout; probes unpack the
-    bytes in-plan via similarity.sq8_unpack), no float vectors;
-    centroids persist like build_ivf_index's. Deterministic seed
-    centroids (the n lowest-id vectors) keep the ENTIRE path —
-    assignment, probe choice, quantization, reconstruction scoring —
-    DuckDB-replayable, the build_ivfpq_index(train_iters=0)
-    convention. Unlike IVF-PQ there is no codebook to train or
-    freeze: the per-vector quantizer is data-independent, so appends
-    only need the frozen centroids."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        deterministic_centroids,
-        ivf_assign,
-        sq8_encode,
-    )
-
-    centroids = deterministic_centroids(df, n_centroids, vec_col, id_col)
-    dim = centroids.shape[1]
-    spark = df.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    _write_artifact(spark, cent_rows, f"cell int, {vec_col} array<double>", _centroids_path(path))
-    assigned = ivf_assign(df.select(id_col, vec_col), centroids, vec_col)
-    (
-        sq8_encode(assigned, vec_col=vec_col, id_col=id_col, passthrough=("cell",))
-        .drop("sq8_codes")  # binary-only on disk; probes unpack in-plan
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(spark, path, dim=dim)
+def build_lsh_index(df, path, n_bits=8, seed=42, vec_col=VEC, id_col=ID, dim=None, meta_cols=()):
+    build(kind="lsh", **locals())
 
 
-def append_ivfsq8_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental IVF-SQ8 ingest: the delta is assigned against the
-    FROZEN persisted centroids (recomputing them would re-key
-    existing rows) and SQ8-encoded into the per-cell partitions — the
-    per-vector quantizer itself needs no frozen state. One Arrow pass
-    over the delta."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        ivf_assign,
-        sq8_encode,
-    )
-
-    if df_new.isEmpty():
-        return
-    spark = df_new.sparkSession
-    centroids = load_centroids(spark, path, vec_col)
-    assigned = ivf_assign(df_new.select(id_col, vec_col), centroids, vec_col)
-    (
-        sq8_encode(assigned, vec_col=vec_col, id_col=id_col, passthrough=("cell",))
-        .drop("sq8_codes")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(df_new.sparkSession, path),
-    )
+def append_lsh_index(df_new, path, n_bits=8, seed=42, vec_col=VEC, id_col=ID, dim=None,
+                     meta_cols=()):
+    append(kind="lsh", **locals())
 
 
-def ivfsq8_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """IVF-SQ8 probe: rank the persisted centroids driver-side, read
-    only the ``n_probe`` nearest CODE partitions (PartitionFilters on
-    ``cell``), reconstruct ``mn + code * sc`` inside the distance
-    fold — whole-stage codegen, TakeOrderedAndProject. Same cell
-    choice as ivfpq_probe, same scoring as sq8_probe."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        sq8_score_topk,
-        sq8_unpack,
-    )
-
-    centroids = load_centroids(spark, path)
-    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(c) for c in (norm @ qn).argsort()[::-1][:n_probe]]
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("cell").isin(probe_cells)).select(
-        id_col,
-        "mn",
-        "sc",
-        sq8_unpack("sq8_code", _sq8_dim(path, query_vec)).alias("sq8_codes"),
-    )
-    return sq8_score_topk(cand, list(query_vec), k=k, id_col=id_col)
+def lsh_probe(spark, path, query_vec, k=10, n_bits=8, seed=42, multiprobe_bits=1, vec_col=VEC,
+              id_col=ID, candidate_filter=None, as_of_batch=None):
+    return probe(kind="lsh", **locals())
 
 
-def sq8_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """SQ8 probe: scan the persisted codes table (never floats),
-    reconstruct ``mn + code * sc`` inside the distance fold, top-k by
-    TakeOrderedAndProject. Scores are bit-identical to the scan-time
-    ``sq8_adc_topk`` (same IEEE operation order), so the persisted
-    path inherits the scan path's oracle."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        sq8_score_topk,
-        sq8_unpack,
-    )
-
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch).select(
-        id_col,
-        "mn",
-        "sc",
-        sq8_unpack("sq8_code", _sq8_dim(path, query_vec)).alias("sq8_codes"),
-    )
-    return sq8_score_topk(idx, list(query_vec), k=k, id_col=id_col)
+def lsh_probe_batch(spark, path, queries, k=10, n_bits=8, seed=42, multiprobe_bits=1,
+                    vec_col=VEC, id_col=ID, candidate_filter=None, as_of_batch=None):
+    return probe_batch(kind="lsh", **locals())
 
 
-def build_prefix_index(
-    df: DataFrame,
-    path: str,
-    prefix_dim: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Dimension-split (matryoshka) layout for prefix-refine
-    retrieval: the vector column is persisted as TWO parquet columns,
-    ``prefix`` (dims 1..prefix_dim) and ``rest``, so the coarse stage
-    of ``prefix_refine_probe`` scans dim/prefix_dim fewer vector
-    bytes — the IO half of the MRL adaptive-retrieval win that
-    similarity.knn_prefix_refine (arithmetic-only over a fused
-    column) cannot get. Files are sorted by ``id_col`` so the refine
-    stage's shortlist IN-list prunes row groups via footer min/max.
-    No model state: the split is a pure projection, so appends need
-    only the manifest-recorded (dim, prefix_dim)."""
-    dim = _peek_dim(df, vec_col)
-    if not 0 < prefix_dim < dim:
-        raise ValueError(f"prefix_dim must be in (0, {dim}): {prefix_dim}")
-    (
-        df.select(
-            id_col,
-            F.slice(F.col(vec_col), 1, prefix_dim).alias("prefix"),
-            F.slice(F.col(vec_col), prefix_dim + 1, dim - prefix_dim).alias("rest"),
-        )
-        .sortWithinPartitions(id_col)
-        .write.mode("overwrite")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(df.sparkSession, path, dim=dim, prefix_dim=prefix_dim)
+def build_ivf_index(df, path, n_centroids=16, vec_col=VEC, id_col=ID, refine_iters=0,
+                    meta_cols=()):
+    build(kind="ivf", **locals())
 
 
-def manifest_prefix_dim(path: str) -> int | None:
-    """prefix_dim recorded by build_prefix_index, or None."""
-    for entry in read_manifest(path):
-        if "prefix_dim" in entry:
-            return int(entry["prefix_dim"])
-    return None
+def append_ivf_index(df_new, path, vec_col=VEC, id_col=ID, meta_cols=()):
+    append(kind="ivf", **locals())
 
 
-def append_prefix_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental dimension-split ingest: project the delta through
-    the manifest-recorded split — a pure per-row projection, nothing
-    frozen to drift. Records the fence position (snapshot-probe
-    ordering, see _index_rows)."""
-    if df_new.isEmpty():
-        return
-    pd_ = manifest_prefix_dim(path)
-    dim = manifest_dim(path)
-    if pd_ is None or dim is None:
-        raise ValueError(f"index at {path!r} has no prefix-split manifest")
-    (
-        df_new.select(
-            id_col,
-            F.slice(F.col(vec_col), 1, pd_).alias("prefix"),
-            F.slice(F.col(vec_col), pd_ + 1, dim - pd_).alias("rest"),
-        )
-        .sortWithinPartitions(id_col)
-        .write.mode("append")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(df_new.sparkSession, path),
-    )
+def append_ivf_index_fenced(df_new, path, batch_id, vec_col=VEC, id_col=ID, meta_cols=()):
+    append(kind="ivf", **locals())
 
 
-def prefix_refine_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Two-stage probe over the dimension-split index. Stage 1 scans
-    ONLY (id, prefix) — the plan's ReadSchema carries no ``rest``
-    column, so at dim 64 / prefix 16 the coarse pass moves ~4x fewer
-    vector bytes than a fused-column scan (plan-guarded in
-    tests/test_plans.py) — and keeps a ``shortlist`` by rounded
-    prefix cosine. Stage 2 re-reads just the shortlist ids (driver
-    IN-list over the id-sorted files: row-group pruning) and re-ranks
-    by exact full-dim cosine over ``concat(prefix, rest)`` — element
-    values and fold order are identical to the fused column, so
-    results are bit-identical to similarity.knn_prefix_refine and
-    the persisted path inherits the scan path's oracle (index ≡
-    scan, the q02j/q02t pattern)."""
-    from unified_log_aggregation_and_analytics_spark.functions.vectors import (
-        cosine_similarity,
-    )
-
-    pd_ = manifest_prefix_dim(path)
-    if pd_ is None:
-        raise ValueError(f"index at {path!r} has no prefix-split manifest")
-    dim = len(query_vec)
-    built_dim = manifest_dim(path)
-    if built_dim is not None and dim != built_dim:
-        raise ValueError(
-            f"query dim {dim} != index build dim {built_dim} at {path!r}"
-        )
-    q_pref = [float(x) for x in query_vec[:pd_]]
-    q_full = [float(x) for x in query_vec]
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    coarse = (
-        idx.select(
-            id_col,
-            F.round(
-                cosine_similarity("prefix", q_pref, dim=pd_), 6
-            ).alias("pref_sim"),
-        )
-        .orderBy(F.col("pref_sim").desc(), F.col(id_col))
-        .limit(shortlist)
-    )
-    ids = [r[0] for r in coarse.select(id_col).collect()]
-    return (
-        idx.filter(F.col(id_col).isin(ids))
-        .select(
-            id_col,
-            F.round(
-                cosine_similarity("concat(prefix, rest)", q_full, dim=dim), 6
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+def ivf_probe(spark, path, query_vec, k=10, n_probe=4, vec_col=VEC, id_col=ID,
+              candidate_filter=None, as_of_batch=None):
+    return probe(kind="ivf", **locals())
 
 
-def _rotation_path(path: str) -> str:
-    return f"{path}/rotation"
+def ivf_probe_batch(spark, path, queries, k=10, n_probe=4, vec_col=VEC, id_col=ID,
+                    candidate_filter=None, as_of_batch=None):
+    return probe_batch(kind="ivf", **locals())
 
 
-def load_rotation(spark: SparkSession, path: str) -> np.ndarray:
-    """Read the persisted rotation artifact (n_components rows); cached
-    per manifest version, returned as a copy."""
-
-    def load() -> np.ndarray:
-        rows = spark.read.parquet(_rotation_path(path)).orderBy("comp").collect()
-        return np.asarray([list(r["direction"]) for r in rows], dtype=np.float64)
-
-    return cached(spark, ("ann_rotation", path), _manifest_stamp(path), load).copy()
+def hard_negatives_probe(spark, path, anchors, k=5, n_probe=4, max_sim=0.99, vec_col=VEC,
+                         id_col=ID, label_col="label", candidate_filter=None, as_of_batch=None):
+    return probe_batch(spark, "ivf", path, anchors, k, vec_col, id_col, candidate_filter,
+                       as_of_batch, label_col, max_sim, n_probe=n_probe)
 
 
-def build_rotated_prefix_index(
-    df: DataFrame,
-    path: str,
-    rotation: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Persisted layout for ROTATED prefix retrieval — the r12
-    composition of the dimension-split index (build_prefix_index) and
-    the PCA rotation (similarity.power_pca_rotation): the table
-    stores ``(id, rot, embedding)`` sorted by id, where ``rot`` is
-    the rounded projection onto the FROZEN rotation artifact
-    (persisted next to the table like build_ivf_index's centroids —
-    recomputing it from a grown corpus would re-key every stored
-    projection). The coarse stage scans only (id, rot) — at dim 64 /
-    32 components that is half the vector bytes AND the
-    variance-compacted coordinates that lift recall (the two wins
-    compose); the refine stage re-reads just the shortlist ids'
-    original vectors (IN-list over id-sorted files). Appends project
-    the delta through the frozen artifact — one Arrow pass."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        rotate_project,
-    )
-
-    R = np.asarray(rotation, dtype=np.float64)
-    spark = df.sparkSession
-    rot_rows = [(c, [float(x) for x in R[c]]) for c in range(R.shape[0])]
-    _write_artifact(spark, rot_rows, "comp int, direction array<double>", _rotation_path(path))
-    (
-        rotate_project(df, R, vec_col=vec_col, id_col=id_col)
-        .sortWithinPartitions(id_col)
-        .write.mode("overwrite")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(spark, path, dim=int(R.shape[1]), prefix_dim=int(R.shape[0]))
+def build_ivfpq_index(df, path, n_centroids=16, m=4, codes=8, train_iters=2, seed=42, vec_col=VEC,
+                      id_col=ID):
+    build(kind="ivfpq", **locals())
 
 
-def append_rotated_prefix_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental rotated-prefix ingest against the FROZEN rotation
-    artifact. Rotation drift under heavy append is a rebuild decision
-    (the manifest's append/build ratio is the signal, the IVF
-    convention)."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        rotate_project,
-    )
-
-    if df_new.isEmpty():
-        return
-    spark = df_new.sparkSession
-    R = load_rotation(spark, path)
-    (
-        rotate_project(df_new, R, vec_col=vec_col, id_col=id_col)
-        .sortWithinPartitions(id_col)
-        .write.mode("append")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(spark, path),
-    )
+def append_ivfpq_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="ivfpq", **locals())
 
 
-def append_rotated_prefix_index_fenced(
-    df_new: DataFrame,
-    path: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Streaming twin of append_rotated_prefix_index: the delta
-    projects through the FROZEN rotation artifact and lands in the
-    index's fenced delta area under ``_commit_batch=<id>`` — probes
-    (rotated_prefix_probe via ``_index_rows``) see the batch only
-    after its commit marker, replays replace their own torn rows,
-    and ``as_of_batch`` pins work because fenced deltas carry
-    per-batch lineage (unlike the unfenced append path)."""
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        rotate_project,
-    )
-    from unified_log_aggregation_and_analytics_spark.streaming import fence
-
-    spark = df_new.sparkSession
-    R = load_rotation(spark, path)
-    fence.fenced_append(
-        rotate_project(df_new, R, vec_col=vec_col, id_col=id_col),
-        _delta_path(path),
-        batch_id,
-        (),
-    )
+def ivfpq_probe(spark, path, query_vec, k=10, n_probe=4, id_col=ID, as_of_batch=None):
+    return probe(kind="ivfpq", **locals())
 
 
-def rotated_prefix_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    shortlist: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Two-stage probe over the rotated-prefix layout: the query
-    projects through the persisted rotation driver-side; stage 1's
-    ReadSchema carries only (id, rot); stage 2 re-reads the shortlist
-    ids' original vectors and scores exact full-dim cosine. Scores
-    are bit-identical to similarity.knn_prefix_refine_rotated over
-    the same rotation (the projection pass is shared code), so the
-    persisted path inherits the rotated scan oracle — index ≡
-    scan."""
-    from unified_log_aggregation_and_analytics_spark.functions.vectors import (
-        cosine_similarity,
-    )
-
-    R = load_rotation(spark, path)
-    n_comp, dim = R.shape
-    if dim != len(query_vec):
-        raise ValueError(f"rotation dim {dim} != query dim {len(query_vec)}")
-    rq = np.round(np.asarray(query_vec, dtype=np.float64) @ R.T, 6)
-    q_rot = [float(x) for x in rq]
-    q_full = [float(x) for x in query_vec]
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    coarse = (
-        idx.select(
-            id_col,
-            F.round(
-                cosine_similarity("rot", q_rot, dim=n_comp), 6
-            ).alias("pref_sim"),
-        )
-        .orderBy(F.col("pref_sim").desc(), F.col(id_col))
-        .limit(shortlist)
-    )
-    ids = [r[0] for r in coarse.select(id_col).collect()]
-    return (
-        idx.filter(F.col(id_col).isin(ids))
-        .select(
-            id_col,
-            F.round(
-                cosine_similarity(vec_col, q_full, dim=dim), 6
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+def build_sq8_index(df, path, vec_col=VEC, id_col=ID):
+    build(kind="sq8", **locals())
 
 
-def hard_negatives_probe(
-    spark: SparkSession,
-    path: str,
-    anchors: list[tuple[int, list[float], object]],
-    k: int = 5,
-    n_probe: int = 4,
-    max_sim: float = 0.99,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    candidate_filter: Column | None = None,
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Hard-negative mining over the persisted IVF index — the scale
-    path similarity.hard_negatives promises: each anchor (id, vector,
-    label) probes its ``n_probe`` nearest cells, ONE partition-pruned
-    index read serves the whole anchor batch, and the per-anchor
-    label-inequality filter + similarity ceiling run during the
-    pruned scoring pass (the label column is index metadata, so the
-    filter never touches the corpus). Work scales with
-    |probed cells| + A x |cell|, independent of corpus size — the
-    ivf_probe_batch plan with a per-query predicate instead of a
-    static one."""
-    from pyspark.sql import Window
-
-    from unified_log_aggregation_and_analytics_spark.functions.vectors import (
-        cosine_similarity,
-    )
-
-    if not anchors:
-        raise ValueError("hard_negatives_probe requires at least one anchor")
-    centroids = load_centroids(spark, path, vec_col)
-    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    pairs: list[tuple[int, int]] = []
-    qrows = []
-    for aid, vec, label in anchors:
-        q = np.asarray(vec, dtype=np.float64)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        cells = [int(c) for c in (norm @ q).argsort()[::-1][:n_probe]]
-        pairs.extend((aid, c) for c in cells)
-        qrows.append((aid, [float(x) for x in vec], label))
-    probe_df = spark.createDataFrame(pairs, "anchor_id long, cell int")
-    qdf = spark.createDataFrame(qrows, ["anchor_id", "qe", "q_label"])
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("cell").isin(sorted({c for _, c in pairs})))
-    if candidate_filter is not None:
-        cand = cand.filter(candidate_filter)
-    sims = (
-        cand.join(F.broadcast(probe_df), "cell")
-        .join(F.broadcast(qdf), "anchor_id")
-        .filter(F.col(label_col) != F.col("q_label"))
-        .select(
-            "anchor_id",
-            F.col(id_col),
-            F.col(label_col),
-            F.round(cosine_similarity(F.col(vec_col), F.col("qe")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") <= F.lit(max_sim))
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("anchor_id", id_col, label_col, "cos_sim", "rank")
-    )
+def append_sq8_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="sq8", **locals())
 
 
-def build_opq_index(
-    df: DataFrame,
-    path: str,
-    rotation: np.ndarray,
-    m: int = 4,
-    codes: int = 8,
-    train_iters: int = 0,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Flat OPQ codes index (r13; Ge et al. CVPR'13 parametric OPQ
-    persisted): the table stores ONLY ``(id, pq_codes, pq_code)`` of
-    the ROTATED coordinates — m bytes of code per vector, the '100 TB
-    of floats scans as ~3 TB of codes' memory story with the
-    rotation's quantization quality folded in. The rotation (already
-    row-permuted by the eigenvalue allocation — pass
-    ``R[pq.opq_interleave_perm(dim, m)]``) and the codebooks persist
-    as frozen artifacts next to the table (the build_ivfpq_index
-    contract: recomputing either on a grown corpus would re-key every
-    stored code). ``train_iters=0`` keeps the seeded data-independent
-    codebooks — the DuckDB-replayable certification form; >0 Lloyd-
-    trains them on the rotated coords (the quality form)."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import (
-        pq_encode,
-        seeded_pq_codebooks,
-        train_pq_codebooks,
-    )
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        rotate_project,
-    )
-
-    R = np.asarray(rotation, dtype=np.float64)
-    n_comp, dim = R.shape
-    if n_comp != dim:
-        raise ValueError(
-            f"OPQ needs a full-rank rotation (got {n_comp} x {dim}): "
-            "ADC distances live in the rotated space, so dropping "
-            "components silently drops distance mass"
-        )
-    spark = df.sparkSession
-    rot_rows = [(c, [float(x) for x in R[c]]) for c in range(n_comp)]
-    _write_artifact(spark, rot_rows, "comp int, direction array<double>", _rotation_path(path))
-    proj = rotate_project(df, R, vec_col=vec_col, id_col=id_col).select(
-        id_col, F.col("rot").alias(vec_col)
-    )
-    if train_iters > 0:
-        cb = train_pq_codebooks(
-            proj, dim, m=m, codes=codes, n_iter=train_iters, seed=seed
-        )
-    else:
-        cb = seeded_pq_codebooks(dim, m=m, codes=codes, seed=seed)
-    cb_rows = [
-        (mi, ci, [float(x) for x in cb[mi, ci]])
-        for mi in range(m)
-        for ci in range(codes)
-    ]
-    _write_artifact(spark, cb_rows, "mi int, ci int, codeword array<double>", _codebooks_path(path))
-    (
-        pq_encode(proj, cb, vec_col=vec_col, id_col=id_col)
-        .write.mode("overwrite")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(spark, path, dim=dim)
+def sq8_probe(spark, path, query_vec, k=10, id_col=ID, as_of_batch=None):
+    return probe(kind="sq8", **locals())
 
 
-def append_opq_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental OPQ ingest: the delta projects through the FROZEN
-    rotation and encodes against the FROZEN codebooks — one Arrow
-    pass, appended rows indistinguishable from build-time rows
-    (append ≡ rebuild pinned in tests). Quantizer/rotation drift
-    under heavy append is a rebuild decision; the manifest's
-    append/build ratio is the signal."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_encode
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        rotate_project,
-    )
-
-    if df_new.isEmpty():
-        return
-    spark = df_new.sparkSession
-    R = load_rotation(spark, path)
-    cb = load_codebooks(spark, path)
-    proj = rotate_project(df_new, R, vec_col=vec_col, id_col=id_col).select(
-        id_col, F.col("rot").alias(vec_col)
-    )
-    (
-        pq_encode(proj, cb, vec_col=vec_col, id_col=id_col)
-        .write.mode("append")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(spark, path),
-    )
+def build_ivfsq8_index(df, path, n_centroids=16, vec_col=VEC, id_col=ID):
+    build(kind="ivfsq8", **locals())
 
 
-def opq_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """OPQ ADC probe over the persisted codes: the query projects
-    through the frozen rotation driver-side (rounded 6, the
-    rotate_project discipline), the (m x codes) lookup table embeds
-    as literals, and the scan moves m bytes per row — map-only +
-    TakeOrderedAndProject, the pq_adc_topk plan over the codes-only
-    table. Scores are identical to the scan-time seeded OPQ pipeline
-    (index ≡ scan), so the persisted path inherits its oracle."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_adc_topk
-
-    R = load_rotation(spark, path)
-    if R.shape[1] != len(query_vec):
-        raise ValueError(
-            f"query dim {len(query_vec)} != rotation dim {R.shape[1]} at {path!r}"
-        )
-    rq = [
-        float(x)
-        for x in np.round(np.asarray(query_vec, dtype=np.float64) @ R.T, 6)
-    ]
-    cb = load_codebooks(spark, path)
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    return pq_adc_topk(idx, cb, rq, k=k, id_col=id_col)
+def append_ivfsq8_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="ivfsq8", **locals())
 
 
-def build_ivfopq_index(
-    df: DataFrame,
-    path: str,
-    rotation: np.ndarray,
-    n_centroids: int = 16,
-    m: int = 4,
-    codes: int = 8,
-    train_iters: int = 0,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """IVF-OPQ index build (r14, verdict item 5) — the FAISS-standard
-    ``OPQ<M>,IVF<C>,PQ<M>`` composition: one orthonormal pretransform
-    (the OPQ rotation, already row-permuted by the round-robin
-    eigenvalue allocation — pass ``R[pq.opq_interleave_perm(dim, m)]``),
-    then the ENTIRE two-level IVF-PQ structure built in the rotated
-    space: coarse cells bound WHERE a probe reads, rotated-space PQ
-    codes bound HOW MUCH, the rotation folds quantization quality in.
-    The rotation is orthonormal, so cosine cell assignment in rotated
-    coordinates matches raw-space assignment up to the shared round-6
-    projection grid — the coarse level loses nothing by living in the
-    rotated space, and the fine level gains OPQ's variance balancing.
-
-    Persisted artifacts: rotation + centroids (rotated coords) +
-    codebooks + the codes-only table ``(id, pq_codes, pq_code)``
-    partitioned by cell. ``train_iters=0`` keeps seeded
-    data-independent codebooks — the DuckDB-replayable certification
-    form; >0 Lloyd-trains on the rotated coords (the quality form).
-    100 TB: one Arrow projection+assign+encode pass over the corpus;
-    probes touch n_probe/n_centroids of an m-bytes-per-row table."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import (
-        pq_encode,
-        seeded_pq_codebooks,
-        train_pq_codebooks,
-    )
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        deterministic_centroids,
-        ivf_assign,
-        rotate_project,
-    )
-
-    R = np.asarray(rotation, dtype=np.float64)
-    n_comp, dim = R.shape
-    if n_comp != dim:
-        raise ValueError(
-            f"IVF-OPQ needs a full-rank rotation (got {n_comp} x {dim}): "
-            "ADC distances live in the rotated space, so dropping "
-            "components silently drops distance mass"
-        )
-    spark = df.sparkSession
-    rot_rows = [(c, [float(x) for x in R[c]]) for c in range(n_comp)]
-    _write_artifact(spark, rot_rows, "comp int, direction array<double>", _rotation_path(path))
-    proj = rotate_project(df, R, vec_col=vec_col, id_col=id_col).select(
-        id_col, F.col("rot").alias(vec_col)
-    )
-    centroids = deterministic_centroids(proj, n_centroids, vec_col, id_col)
-    if train_iters > 0:
-        cb = train_pq_codebooks(
-            proj, dim, m=m, codes=codes, n_iter=train_iters, seed=seed
-        )
-    else:
-        cb = seeded_pq_codebooks(dim, m=m, codes=codes, seed=seed)
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    _write_artifact(spark, cent_rows, f"cell int, {vec_col} array<double>", _centroids_path(path))
-    cb_rows = [
-        (mi, ci, [float(x) for x in cb[mi, ci]])
-        for mi in range(m)
-        for ci in range(codes)
-    ]
-    _write_artifact(spark, cb_rows, "mi int, ci int, codeword array<double>", _codebooks_path(path))
-    assigned = ivf_assign(proj, centroids, vec_col)
-    (
-        pq_encode(assigned, cb, vec_col=vec_col, id_col=id_col, passthrough=("cell",))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _finalize_build(spark, path, dim=dim)
+def ivfsq8_probe(spark, path, query_vec, k=10, n_probe=4, id_col=ID, as_of_batch=None):
+    return probe(kind="ivfsq8", **locals())
 
 
-def append_ivfopq_index(
-    df_new: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental IVF-OPQ ingest: the delta projects through the
-    FROZEN rotation, assigns against the FROZEN rotated-space
-    centroids, and encodes against the FROZEN codebooks — one Arrow
-    pass, appended rows indistinguishable from build-time rows
-    (append ≡ rebuild pinned in tests). Rotation/quantizer drift
-    under heavy append is a rebuild decision; the manifest's
-    append/build ratio is the signal."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_encode
-    from unified_log_aggregation_and_analytics_spark.operators.similarity import (
-        ivf_assign,
-        rotate_project,
-    )
-
-    if df_new.isEmpty():
-        return
-    spark = df_new.sparkSession
-    R = load_rotation(spark, path)
-    centroids = load_centroids(spark, path, vec_col)
-    cb = load_codebooks(spark, path)
-    proj = rotate_project(df_new, R, vec_col=vec_col, id_col=id_col).select(
-        id_col, F.col("rot").alias(vec_col)
-    )
-    assigned = ivf_assign(proj, centroids, vec_col)
-    (
-        pq_encode(assigned, cb, vec_col=vec_col, id_col=id_col, passthrough=("cell",))
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(_table_path(path))
-    )
-    _record_version(
-        path, "append", df_new.count(),
-        fence_pos=_fence_pos(spark, path),
-    )
+def build_prefix_index(df, path, prefix_dim=16, vec_col=VEC, id_col=ID):
+    build(kind="prefix", **locals())
 
 
-def ivfopq_probe(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """IVF-OPQ probe: the query projects through the frozen rotation
-    driver-side (round-6, the rotate_project discipline), the rotated
-    centroids rank driver-side, only the ``n_probe`` nearest CODE
-    partitions are read (PartitionFilters on ``cell``), and the scan
-    scores by asymmetric distance in the rotated space — the ivfpq
-    probe plan with the rotation folded into the frozen artifacts.
-    Returns approximate squared-L2 distances (``adc_dist`` asc);
-    rotation is orthonormal, so rotated-space L2 IS raw-space L2."""
-    from unified_log_aggregation_and_analytics_spark.operators.pq import pq_adc_topk
+def append_prefix_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="prefix", **locals())
 
-    R = load_rotation(spark, path)
-    if R.shape[1] != len(query_vec):
-        raise ValueError(
-            f"query dim {len(query_vec)} != rotation dim {R.shape[1]} at {path!r}"
-        )
-    rq = [
-        float(x)
-        for x in np.round(np.asarray(query_vec, dtype=np.float64) @ R.T, 6)
-    ]
-    centroids = load_centroids(spark, path)
-    norm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    q = np.asarray(rq, dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(c) for c in (norm @ qn).argsort()[::-1][:n_probe]]
-    cb = load_codebooks(spark, path)
-    idx = _index_rows(spark, path, as_of_batch=as_of_batch)
-    cand = idx.filter(F.col("cell").isin(probe_cells)).drop("cell")
-    return pq_adc_topk(cand, cb, rq, k=k, id_col=id_col)
+
+def prefix_refine_probe(spark, path, query_vec, k=10, shortlist=50, id_col=ID, as_of_batch=None):
+    return probe(kind="prefix", **locals())
+
+
+def build_rotated_prefix_index(df, path, rotation, vec_col=VEC, id_col=ID):
+    build(kind="rotated_prefix", **locals())
+
+
+def append_rotated_prefix_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="rotated_prefix", **locals())
+
+
+def rotated_prefix_probe(spark, path, query_vec, k=10, shortlist=50, vec_col=VEC, id_col=ID,
+                         as_of_batch=None):
+    return probe(kind="rotated_prefix", **locals())
+
+
+def build_opq_index(df, path, rotation, m=4, codes=8, train_iters=0, seed=42, vec_col=VEC, id_col=ID):
+    build(kind="opq", **locals())
+
+
+def append_opq_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="opq", **locals())
+
+
+def opq_probe(spark, path, query_vec, k=10, id_col=ID, as_of_batch=None):
+    return probe(kind="opq", **locals())
+
+
+def build_ivfopq_index(df, path, rotation, n_centroids=16, m=4, codes=8, train_iters=0, seed=42,
+                       vec_col=VEC, id_col=ID):
+    build(kind="ivfopq", **locals())
+
+
+def append_ivfopq_index(df_new, path, vec_col=VEC, id_col=ID):
+    append(kind="ivfopq", **locals())
+
+
+def ivfopq_probe(spark, path, query_vec, k=10, n_probe=4, id_col=ID, as_of_batch=None):
+    return probe(kind="ivfopq", **locals())

@@ -288,43 +288,36 @@ class FencedBatch:
                 df.unpersist()
 
 
-def is_committed(spark: SparkSession, root: str, batch_id: int) -> bool:
-    bid = int(batch_id)
-    if path_exists(spark, f"{root}/{bid}"):
-        return True
-    # covered by a rollup? (rare path: individual markers exist for
-    # every recent batch; only long-replayed history is rolled up)
-    return any(bid <= k for k in _rollup_ids(spark, root))
-
-
-def _rollup_ids(spark: SparkSession, root: str) -> list[int]:
+def _markers(spark: SparkSession, root: str) -> tuple[set[int], int]:
+    """(individual marker ids, highest ``_upto_<k>`` rollup or -1) under
+    ``root``: one ``exists`` plus one ``listStatus``. Rollup k means
+    batches 0..k are ALL committed — see rollup_markers."""
     fs, p, _ = _fs(spark, root)
+    singles: set[int] = set()
+    upto = -1
     if not fs.exists(p):
-        return []
-    out = []
+        return singles, upto
     for st in fs.listStatus(p):
         name = st.getPath().getName()
-        if name.startswith("_upto_") and name[6:].isdigit():
-            out.append(int(name[6:]))
-    return sorted(out)
+        if name.isdigit():
+            singles.add(int(name))
+        elif name.startswith("_upto_") and name[6:].isdigit():
+            upto = max(upto, int(name[6:]))
+    return singles, upto
+
+
+def is_committed(spark: SparkSession, root: str, batch_id: int) -> bool:
+    # one listing answers both cases (single marker or covering
+    # rollup); a fresh id — every new trigger — has neither, so probing
+    # the marker path first would only add a round-trip
+    singles, upto = _markers(spark, root)
+    return int(batch_id) <= upto or int(batch_id) in singles
 
 
 def committed_batches(spark: SparkSession, root: str) -> list[int]:
     """All committed batch ids: one tiny FS listing over individual
-    marker files plus any ``_upto_<k>`` rollup (k means batches 0..k
-    are ALL committed — see rollup_markers)."""
-    fs, p, _ = _fs(spark, root)
-    if not fs.exists(p):
-        return []
-    singles, upto = [], -1
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.isdigit():
-            singles.append(int(name))
-        elif name.startswith("_upto_") and name[6:].isdigit():
-            upto = max(upto, int(name[6:]))
-    if upto < 0:
-        return sorted(singles)
+    marker files plus any ``_upto_<k>`` rollup."""
+    singles, upto = _markers(spark, root)
     return sorted(set(range(upto + 1)) | {b for b in singles if b > upto})
 
 

@@ -17,7 +17,7 @@ Per micro-batch:
    ~16 B each, partition-pruned, the corpus vectors are never
    re-read (the fingerprint-sidecar pattern of corpus.py);
 3. APPEND — survivors assign against the FROZEN centroid artifact
-   (one Arrow GEMM over the delta, ann_index.append_ivf_index_fenced)
+   (one Arrow GEMM over the delta, ann_index.append with a batch id)
    and land in the index's fenced delta area, visible to ivf_probe as
    soon as the batch commits;
 4. METRICS — per-batch outcome counts land at ``<path>_metrics``
@@ -76,22 +76,15 @@ def vector_ingest_batch(
     contract). The index must already exist (ann_index.build_ivf_index
     / build_rotated_prefix_index) — the quantizer/rotation is frozen
     at build time, which is what makes streaming appends
-    deterministic. ``index_kind`` picks the fenced append:
-    ``'ivf'`` (cell-partitioned delta), ``'rotated_prefix'``
-    (projection delta), ``'ivfpq'`` or ``'ivfopq'`` (r14:
-    cell-partitioned CODE deltas — frozen centroids/codebooks, plus
-    the frozen rotation for ivfopq; fenced lineage is what keeps
-    training-run snapshot pins sound over a streaming-maintained PQ
-    index). meta_cols are an IVF-only feature."""
+    deterministic. ``index_kind`` names the index (an
+    ``ann_index.KINDS`` key: ``'ivf'``, ``'rotated_prefix'``,
+    ``'ivfpq'``, ``'ivfopq'``, ...); its fenced append encodes the
+    delta against the frozen artifacts — fenced lineage is what keeps
+    training-run snapshot pins sound over a streaming-maintained
+    index. meta_cols are an IVF-only feature."""
     from unified_log_aggregation_and_analytics_spark.operators import ann_index as A
 
-    appenders = {
-        "ivf": A.append_ivf_index_fenced,
-        "rotated_prefix": A.append_rotated_prefix_index_fenced,
-        "ivfpq": A.append_ivfpq_index_fenced,
-        "ivfopq": A.append_ivfopq_index_fenced,
-    }
-    if index_kind not in appenders:
+    if index_kind not in A.KINDS:
         raise ValueError(f"unknown index_kind {index_kind!r}")
     if index_kind != "ivf" and meta_cols:
         raise ValueError("meta_cols are an IVF-index feature")
@@ -159,10 +152,7 @@ def vector_ingest_batch(
             ("rejected:bad_dimension", m["n_bad"]),
         ]
         if n_kept:
-            extra = {"meta_cols": meta_cols} if meta_cols else {}
-            appenders[index_kind](
-                kept, index_path, fb.bid, vec_col=vec_col, id_col=id_col, **extra
-            )
+            A.append(index_kind, kept, index_path, fb.bid, vec_col, id_col, meta_cols)
         # flat single-file sidecar append (id_bucket as data column;
         # the anti-join never pruned its directories — see corpus.py)
         fb.append(
