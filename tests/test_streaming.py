@@ -262,6 +262,43 @@ def test_pipeline_metrics_listener(spark, tmp_path):
         metrics.close()
 
 
+def test_pipeline_metrics_keeps_phases_and_watermark(spark, tmp_path):
+    """K5: the five row-count columns keep their names and order; the
+    per-phase durations and the watermark follow them, and an ec2
+    availableNow run reports its addBatch and triggerExecution."""
+    import time
+
+    from unified_log_aggregation_and_analytics_spark.streaming.pipeline import PipelineMetrics
+
+    logs_dir = tmp_path / "logs"
+    logs_dir.mkdir()
+    (logs_dir / "access_log.1").write_text("\n".join(GOOD_LINES) + "\n")
+    metrics = PipelineMetrics(spark)
+    try:
+        src = stream_text_logs(spark, str(logs_dir))
+        run_pipeline(
+            src, "ec2", str(tmp_path / "t"), str(tmp_path / "r"), str(tmp_path / "c"),
+            trigger={"availableNow": True},
+        ).await_done()
+        for _ in range(40):  # listener events arrive asynchronously
+            if metrics._rows:
+                break
+            time.sleep(0.5)
+        df = metrics.to_df()
+        assert df.schema.simpleString() == (
+            "struct<query_id:string,batch_id:bigint,ts:string,num_input_rows:bigint,"
+            "rows_per_sec:double,duration_ms:map<string,bigint>,watermark:string>"
+        )
+        rows = [r for r in df.collect() if r.num_input_rows > 0]
+        assert rows
+        for r in rows:
+            assert {"addBatch", "triggerExecution"} <= set(r.duration_ms)
+            assert r.duration_ms["triggerExecution"] >= r.duration_ms["addBatch"] >= 0
+            assert r.watermark is None  # normalize_ec2 sets no event-time watermark
+    finally:
+        metrics.close()
+
+
 def test_eks_pipeline_end_to_end(spark, tmp_path):
     """S3 Fluent Bit pod logs -> unified table; stderr maps to error
     level, kubernetes metadata flattens into attrs."""

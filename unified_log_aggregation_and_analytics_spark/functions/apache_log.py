@@ -1,11 +1,30 @@
 """Log-line field extraction (operators T9/T10).
 
-T9: Apache combined-format parsing. The reference ships raw access-log
-lines (sample at reference README.md:47) and explicitly calls out
-extracting "the timestamp, HTTP, and browser information ... as
-separate attributes" as the intended enrichment (README.md:58). Built
-entirely from ``regexp_extract`` + ``to_timestamp`` — JVM-side, inside
-whole-stage codegen; no Python in the hot path.
+T9: Apache combined-format and error-log parsing. The reference ships
+raw access-log lines (sample at reference README.md:47) and explicitly
+calls out extracting "the timestamp, HTTP, and browser information ...
+as separate attributes" as the intended enrichment (README.md:58).
+
+Each line is matched ONCE: ``match_groups`` rewrites the line with
+``regexp_replace(line, RE, SEP $1 SEP ... $n SEP)`` and splits the
+result on ``SEP`` (U+0001), so item ``i`` of the array is group ``i``.
+Callers stage that array as its own projection and read every field
+from it; ``CollapseProject`` keeps the stage because the array is not
+cheap and is read more than once, so the regex runs once per line
+instead of once per field. The array matches per-group
+``regexp_extract`` for every input:
+
+- a line that does not match comes back from ``regexp_replace``
+  unchanged, so its array has one item and every group reads as null
+  (``regexp_extract`` gives ``""``, which ``nullif`` turns into null);
+- the trailing ``SEP`` keeps whatever follows the match (``$`` may stop
+  before a final line terminator such as U+2028) out of the last group;
+- a line that already contains ``SEP`` takes the per-group
+  ``regexp_extract`` branch instead;
+- a null line gives a null array, hence all-null fields.
+
+All of it is JVM-side, inside whole-stage codegen; no Python in the
+hot path.
 
 T10: Lambda function-log record lines are tab-separated
 ``ts\\trequestId\\tLEVEL\\tmessage`` (reference README.md:119,136,
@@ -27,15 +46,43 @@ APACHE_COMBINED_RE = (
 
 _APACHE_TS_FMT = "dd/MMM/yyyy:HH:mm:ss Z"
 
+# Group separator of the one-match rewrite; never part of a log line
+# that takes the one-match path (see match_groups).
+SEP = "\u0001"
 
-def combined_fields(line: Column) -> dict[str, Column]:
+# Name of the staged groups column in parse_apache_combined/_error.
+_GROUPS = "_apache_groups"
+
+
+def match_groups(line: Column, regex: str, n: int) -> Column:
+    """``array<string>`` whose item ``i`` (1..n) is group ``i`` of ONE
+    match of ``regex`` against ``line``; an unmatched group is ``""``
+    and a non-matching line has one item (see the module docstring).
+    Stage it as its own column: every reference to this expression
+    runs the regex again."""
+    rewrite = SEP + SEP.join(f"${i}" for i in range(1, n + 1)) + SEP
+    one_match = F.split(F.regexp_replace(line, regex, rewrite), SEP, -1)
+    per_group = F.array(F.lit(""), *[F.regexp_extract(line, regex, i) for i in range(1, n + 1)])
+    return F.when(line.contains(SEP), per_group).otherwise(one_match)
+
+
+def _reader(groups: Column):
+    """Group ``n`` of a ``match_groups`` array, ``""`` read as null."""
+    return lambda n: F.nullif(F.get(groups, n), F.lit(""))
+
+
+def combined_groups(line: Column) -> Column:
+    """The staged one-match groups of APACHE_COMBINED_RE."""
+    return match_groups(line, APACHE_COMBINED_RE, 11)
+
+
+def combined_fields(line: Column, groups: Column | None = None) -> dict[str, Column]:
     """The combined-format extraction as a named-column bundle, so
     callers that route multiple formats in ONE pass (normalize_ec2)
-    can embed the expressions in a CASE without re-scanning."""
-
-    def grp(n: int) -> Column:
-        return F.nullif(F.regexp_extract(line, APACHE_COMBINED_RE, n), F.lit(""))
-
+    can embed the expressions in a CASE without re-scanning. Pass the
+    staged ``combined_groups(line)`` column as ``groups``; without it
+    the match is inlined into every field and runs once per field."""
+    grp = _reader(combined_groups(line) if groups is None else groups)
     return {
         "client_ip": grp(1),
         "identd": grp(2),
@@ -52,6 +99,20 @@ def combined_fields(line: Column) -> dict[str, Column]:
     }
 
 
+def _parse(df: DataFrame, line_col: str, groups_of, fields_of) -> DataFrame:
+    """Stage ``groups_of(line)`` as its own projection, then project
+    the fields read from it, the passthrough columns and ``_raw``."""
+    line = F.col(line_col)
+    staged = df.withColumn(_GROUPS, groups_of(line))
+    fields = fields_of(line, F.col(_GROUPS))
+    passthrough = [c for c in df.columns if c != line_col]
+    return staged.select(
+        *passthrough,
+        *[v.alias(k) for k, v in fields.items()],
+        line.alias("_raw"),
+    )
+
+
 def parse_apache_combined(df: DataFrame, line_col: str = "value") -> DataFrame:
     """Parse Apache combined-format lines into typed columns (T9).
 
@@ -60,14 +121,7 @@ def parse_apache_combined(df: DataFrame, line_col: str = "value") -> DataFrame:
     rather than poisoning the batch (a documented improvement over the
     reference transformer, which would throw).
     """
-    line = F.col(line_col)
-    fields = combined_fields(line)
-    passthrough = [c for c in df.columns if c != line_col]
-    return df.select(
-        *passthrough,
-        *[v.alias(k) for k, v in fields.items()],
-        line.alias("_raw"),
-    )
+    return _parse(df, line_col, combined_groups, combined_fields)
 
 
 # Apache error-log line. Covers both the 2.2 shape
@@ -85,13 +139,15 @@ APACHE_ERROR_RE = (
 )
 
 
-def error_fields(line: Column) -> dict[str, Column]:
+def error_groups(line: Column) -> Column:
+    """The staged one-match groups of APACHE_ERROR_RE."""
+    return match_groups(line, APACHE_ERROR_RE, 6)
+
+
+def error_fields(line: Column, groups: Column | None = None) -> dict[str, Column]:
     """The error-log extraction as a named-column bundle (see
-    combined_fields for why)."""
-
-    def grp(n: int) -> Column:
-        return F.nullif(F.regexp_extract(line, APACHE_ERROR_RE, n), F.lit(""))
-
+    combined_fields for why, and for ``groups``)."""
+    grp = _reader(error_groups(line) if groups is None else groups)
     ts_clean = F.regexp_replace(  # drop "Wed ", collapse "Oct  1" day pad
         F.regexp_replace(grp(1), r"^[A-Za-z]+ ", ""), r"\s+", " "
     )
@@ -120,20 +176,14 @@ def parse_apache_error(df: DataFrame, line_col: str = "value") -> DataFrame:
     Non-matching lines keep ``_raw`` with null fields — same DLQ
     routing contract as parse_apache_combined.
     """
-    line = F.col(line_col)
-    fields = error_fields(line)
-    passthrough = [c for c in df.columns if c != line_col]
-    return df.select(
-        *passthrough,
-        *[v.alias(k) for k, v in fields.items()],
-        line.alias("_raw"),
-    )
+    return _parse(df, line_col, error_groups, error_fields)
 
 
 def parse_lambda_record_line(df: DataFrame, record_col: str = "record") -> DataFrame:
     """Split a tab-separated Lambda function-log line (T10) into
-    ``log_ts, request_id, level, log_message`` columns."""
-    parts = F.split(F.col(record_col), "\t")
+    ``log_ts, request_id, level, log_message`` columns. The split
+    stops at the third tab, so a message that holds a tab keeps it."""
+    parts = F.split(F.col(record_col), "\t", 4)
     return df.withColumns(
         {
             "log_ts": F.to_timestamp(parts.getItem(0)),

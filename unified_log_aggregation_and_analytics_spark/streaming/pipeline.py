@@ -37,7 +37,9 @@ from pyspark.sql import functions as F
 
 from unified_log_aggregation_and_analytics_spark.functions.apache_log import (
     combined_fields,
+    combined_groups,
     error_fields,
+    error_groups,
     parse_apache_combined,
 )
 from unified_log_aggregation_and_analytics_spark.operators.transforms import (
@@ -66,8 +68,7 @@ def normalize_ec2(df: DataFrame) -> DataFrame:
     (ec2-startup.sh:46-49), so one batch mixes both formats; lines are
     routed by their leading character (error lines start with '[',
     access lines with the client ip). Each branch applies its regex
-    only to its own rows; the union is two filtered scans of the same
-    micro-batch — the standard routing split, no shuffle added.
+    only to its own rows.
 
     Access level derives from HTTP status (5xx error / 4xx warn / else
     info); error-log level maps the httpd severity onto the unified
@@ -75,14 +76,21 @@ def normalize_ec2(df: DataFrame) -> DataFrame:
     keeps the original in attrs.err_level.
 
     ONE pass, one scan: the two extraction bundles embed in CASE
-    expressions keyed on the leading character, so each row evaluates
-    only its own format's regexes and the source is never read twice
-    (a union of two filtered branches would double numInputRows and,
-    at 100 TB, ingest cost)."""
+    expressions keyed on the leading character, so the source is never
+    read twice (a union of two filtered branches would double
+    numInputRows and, at 100 TB, ingest cost). Each bundle's one-match
+    groups are staged behind its own route, so every line runs exactly
+    one full-line regex: its own format's."""
     line = F.col("value")
-    is_err = line.rlike(r"^\[")
-    acc = combined_fields(line)
-    err = error_fields(line)
+    is_err = line.startswith("[")
+    staged = df.withColumns(
+        {
+            "_acc_groups": F.when(~is_err, combined_groups(line)),
+            "_err_groups": F.when(is_err, error_groups(line)),
+        }
+    )
+    acc = combined_fields(line, F.col("_acc_groups"))
+    err = error_fields(line, F.col("_err_groups"))
 
     acc_level = (
         F.when(acc["status"] >= 500, "error")
@@ -114,7 +122,7 @@ def normalize_ec2(df: DataFrame) -> DataFrame:
     attrs = F.map_filter(
         F.when(is_err, err_attrs).otherwise(acc_attrs), lambda _, v: v.isNotNull()
     )
-    return _finish(df, "ec2", ts, level, message, attrs, line)
+    return _finish(staged, "ec2", ts, level, message, attrs, line)
 
 
 def normalize_ecs(df: DataFrame) -> DataFrame:
@@ -489,7 +497,11 @@ class PipelineMetrics:
     """K5 — pipeline self-metrics (reference utils.ts:60-64 CloudWatch
     logging, ec2-startup.sh:41 emitMetrics): a StreamingQueryListener
     records per-micro-batch progress; ``to_df`` exposes it as a table
-    the same analytic operators can query."""
+    the same analytic operators can query. Besides the row counts each
+    row keeps the progress event's ``durationMs`` phases (addBatch,
+    getBatch, latestOffset, queryPlanning, walCommit, commitOffsets,
+    triggerExecution; whichever the event reports) and the event-time
+    watermark (null when the query defines none)."""
 
     def __init__(self, spark) -> None:
         from pyspark.sql.streaming import StreamingQueryListener
@@ -510,6 +522,8 @@ class PipelineMetrics:
                         p.timestamp,
                         p.numInputRows,
                         float(p.processedRowsPerSecond or 0.0),
+                        {k: int(v) for k, v in (p.durationMs or {}).items()},
+                        (p.eventTime or {}).get("watermark"),
                     )
                 )
 
@@ -523,7 +537,8 @@ class PipelineMetrics:
     def to_df(self) -> DataFrame:
         return self._spark.createDataFrame(
             self._rows,
-            "query_id string, batch_id long, ts string, num_input_rows long, rows_per_sec double",
+            "query_id string, batch_id long, ts string, num_input_rows long, "
+            "rows_per_sec double, duration_ms map<string,long>, watermark string",
         )
 
     def close(self) -> None:
