@@ -1,5 +1,5 @@
 """X5 multimodal plumbing tests: schema round-trip, feature
-extraction, resize metadata, frame sampling fan-out. Decode stubs are
+extraction, resize metadata, real codecs and fingerprints. Decode stubs are
 deterministic, so outputs are exact."""
 
 from __future__ import annotations
@@ -98,28 +98,6 @@ def test_resize_media_real_roundtrip(spark):
             src.astype(np.int64).reshape(2, 2, 2, 2, 3).sum(axis=(1, 3)) / 4.0 + 0.5
         ).astype(np.uint8)
         assert np.array_equal(px, ref), d
-
-
-def test_sample_frames_fanout(spark, media):
-    # give every video a 3500 ms duration -> 4 frames at 1000 ms grid
-    vids = media.withColumn(
-        "duration_ms",
-        F.when(F.col("modality") == "video", F.lit(3500)).otherwise(F.col("duration_ms")),
-    )
-    n_videos = vids.filter(F.col("modality") == "video").count()
-    frames = MM.sample_frames(vids, every_ms=1000)
-    assert frames.count() == n_videos * 4
-    one = frames.filter(F.col("media_id") == 2).orderBy("frame_idx").collect()
-    assert [r.frame_ts_ms for r in one] == [0, 1000, 2000, 3000]
-    # frame payload slides with the index (the stubbed seek window)
-    src = bytes(vids.filter(F.col("media_id") == 2).collect()[0].payload)
-    assert [bytes(r.frame_payload) for r in one] == [src[i : i + 16] for i in range(4)]
-
-
-def test_sample_frames_null_duration_single_frame(spark, media):
-    frames = MM.sample_frames(media, every_ms=1000)  # fixture durations are null
-    per = frames.groupBy("media_id").count().collect()
-    assert per and all(r["count"] == 1 for r in per)
 
 
 def test_ppm_decode_is_real(spark):

@@ -1343,3 +1343,76 @@ def test_read_log_table_as_of_snapshot(spark, tmp_path):
     assert read_log_table(spark, table, as_of_batch=5).count() > base
     # unpinned read sees everything
     assert read_log_table(spark, table).count() > base + n
+
+
+def test_malformed_fields_route_to_dlq_under_ansi(spark, tmp_path):
+    """Under ANSI mode one malformed field in a log line must not fail
+    the micro-batch: an impossible date or an unparseable event time
+    sends the line to the DLQ with a null ``ts``, a non-numeric bytes
+    value or an overflowing pid reads as null, and the good rows come
+    out exactly as they do in a batch of their own."""
+    from unified_log_aggregation_and_analytics_spark.schemas import EKS_FLUENTBIT
+    from unified_log_aggregation_and_analytics_spark.streaming.pipeline import (
+        NORMALIZERS,
+        dlq_split,
+        read_log_table,
+    )
+
+    bad_date = '10.0.0.9 - - [99/Oct/2000:13:55:36 -0700] "GET / HTTP/1.1" 200 5 "-" "ua"'
+    bad_bytes = '10.0.0.10 - - [29/Jul/2021:17:00:00 +0000] "GET /big HTTP/1.1" 200 12k "-" "ua"'
+    big_pid = (
+        "[Thu Jul 29 18:00:00.123456 2021] [core:error] "
+        "[pid 99999999999999999999] [client 10.0.0.1:4753] boom"
+    )
+    kube = {"namespace_name": "ns", "pod_name": "p", "container_name": "c",
+            "host": "h", "labels": None}
+    eks_good = ("GET / 200", "stdout", "2021-07-29T15:32:33.000Z", kube)
+    lam_good = {"time": "2021-07-29T19:54:09.096Z", "type": "function",
+                "record": "2021-07-29T19:54:09.094Z\treq-1\tINFO\tfine\n"}
+    lam_bad = {"time": "not-a-time", "type": "function",
+               "record": "not-a-time\treq-2\tINFO\tbroken\n"}
+    batches = {
+        "ec2": (
+            [(ln,) for ln in GOOD_LINES],
+            [(ln,) for ln in [bad_date, bad_bytes, big_pid]],
+            "value string",
+        ),
+        "ecs": (
+            [(ln, "c1", "web", "cl", "arn", "td", "stdout") for ln in GOOD_LINES],
+            [(bad_date, "c1", "web", "cl", "arn", "td", "stdout")],
+            ECS_FIRELENS,
+        ),
+        "eks": ([eks_good], [("oops", "stderr", "not-a-time", kube)], EKS_FLUENTBIT),
+        "lambda": ([(json.dumps([lam_good]),)], [(json.dumps([lam_bad]),)], "value string"),
+    }
+
+    def key(r):
+        return (r.message, r.level, str(r.ts), str(r.log_date), sorted(r.attrs.items()))
+
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for src, (good, bad, schema) in batches.items():
+            norm = NORMALIZERS[src]
+            alone = sorted(key(r) for r in norm(spark.createDataFrame(good, schema)).collect())
+            table, rej = str(tmp_path / src / "t"), str(tmp_path / src / "r")
+            dlq_split(
+                norm(spark.createDataFrame(good + bad, schema)), table, rej,
+                source=src, batch_id=0,
+            )
+            got = {r._raw: r for r in read_log_table(spark, table).collect()}
+            dlq = spark.read.parquet(f"{rej}/source={src}").collect()
+            if src == "ec2":
+                assert [r._raw for r in dlq] == [bad_date]
+                assert "bytes" not in got[bad_bytes].attrs
+                assert got[bad_bytes].attrs["status"] == "200"
+                assert "pid" not in got[big_pid].attrs
+                assert got[big_pid].attrs["module"] == "core"
+                got = {k: v for k, v in got.items() if k in GOOD_LINES}
+            else:
+                assert len(dlq) == 1
+            assert all(r.ts is None for r in dlq)
+            assert sorted(key(r) for r in got.values()) == alone
+            assert alone and all(k[2] != "None" for k in alone)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)

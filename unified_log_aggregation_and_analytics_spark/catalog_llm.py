@@ -6164,8 +6164,8 @@ def multimodal_keyframes_mjpeg(spark, sf_dir):
 def multimodal_video_frames(spark, sf_dir):
     """X5 — REAL frame sampling: decode Y4M, take the frame under
     each 80 ms grid point (frame_idx = ts*fps//1000, integer
-    arithmetic), emit per-frame luma means — the 1-to-N fan-out of
-    sample_frames with decoded content instead of payload slices.
+    arithmetic), emit per-frame luma means — a 1-to-N fan-out with
+    decoded content (multimodal.frame_luma_stats).
     Oracle replays grid, cap, and per-frame means analytically."""
     docs = _spread(_t(spark, sf_dir, "documents"), max_partitions=8)
     media = MM.media_with_y4m(docs, width=4, height=4)

@@ -23,6 +23,11 @@ instead of once per field. The array matches per-group
   ``regexp_extract`` branch instead;
 - a null line gives a null array, hence all-null fields.
 
+Every typed field parses with ``try_cast`` / ``try_to_timestamp``:
+under ANSI mode (Spark 4's default) a malformed value — an impossible
+date, a ``12k`` bytes field — reads as null instead of failing the
+job, and a null ``ts`` sends the line to the DLQ.
+
 All of it is JVM-side, inside whole-stage codegen; no Python in the
 hot path.
 
@@ -87,13 +92,13 @@ def combined_fields(line: Column, groups: Column | None = None) -> dict[str, Col
         "client_ip": grp(1),
         "identd": grp(2),
         "user": grp(3),
-        "ts": F.to_timestamp(grp(4), _APACHE_TS_FMT),
+        "ts": F.try_to_timestamp(grp(4), F.lit(_APACHE_TS_FMT)),
         "method": grp(5),
         "path": grp(6),
         "protocol": grp(7),
-        "status": grp(8).cast("int"),
-        # '-' means no bytes; cast of '-' yields null which is correct
-        "bytes": F.when(grp(9) == "-", F.lit(None)).otherwise(grp(9)).cast("long"),
+        "status": grp(8).try_cast("int"),
+        # '-' means no bytes; a non-numeric value ('12k') is null too
+        "bytes": F.when(grp(9) == "-", F.lit(None)).otherwise(grp(9)).try_cast("long"),
         "referer": grp(10),
         "user_agent": grp(11),
     }
@@ -159,7 +164,7 @@ def error_fields(line: Column, groups: Column | None = None) -> dict[str, Column
         "ts": ts,
         "module": grp(2),
         "level": grp(3),
-        "pid": grp(4).cast("long"),
+        "pid": grp(4).try_cast("long"),
         # 2.4 appends :port to the client; strip it, keep the ip
         "client_ip": F.regexp_replace(grp(5), r":\d+$", ""),
         "message": grp(6),
@@ -186,7 +191,7 @@ def parse_lambda_record_line(df: DataFrame, record_col: str = "record") -> DataF
     parts = F.split(F.col(record_col), "\t", 4)
     return df.withColumns(
         {
-            "log_ts": F.to_timestamp(parts.getItem(0)),
+            "log_ts": F.try_to_timestamp(parts.getItem(0)),
             "request_id": parts.getItem(1),
             "level": parts.getItem(2),
             "log_message": F.trim(parts.getItem(3)),

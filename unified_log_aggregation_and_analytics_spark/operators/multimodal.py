@@ -25,6 +25,25 @@ Scale notes:
   what Pillow/ffmpeg would do — but all row bookkeeping is pandas.)
 - Feature extraction emits fixed-size vectors, so downstream
   similarity ops (operators/similarity.py) apply unchanged.
+
+Three private cores carry the per-function skeletons:
+- ``_media_frame`` builds the MEDIA_SCHEMA frame of every fixture
+  builder (``media_with_*``, ``media_routing_fixture``); a builder
+  supplies only its closed-form payload formula, and the WAV builders
+  write their header through ``_wav_bytes``, as ``encode_wav_pcm``
+  does.
+- ``_MODALITIES`` maps image/audio/video to (decode, fingerprint).
+  ``media_gate_hash`` and ``_fingerprints`` (behind ``image_dhash``,
+  ``audio_hash``, ``audio_hash_dft`` and ``video_hash``) both read it,
+  so the gate and the hash ops cannot drift apart. The ops drop rows
+  that do not decode (and zero-frame videos) and let decoder errors
+  raise; the gate turns every decoder error into ``decode_ok=false``
+  and marks a zero-frame video ok with a null hash.
+- ``_rewrite_media`` is the payload rewrite behind ``resize_media``,
+  ``resize_video``, ``resample_video`` and ``resample_audio``: one
+  modality mask, one ``on_exotic`` check, and one rule for a payload
+  that does not decode (it and the metadata the rewrite sets go null;
+  ``mime`` changes only on success).
 """
 
 from __future__ import annotations
@@ -59,6 +78,45 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.LongType(), True),
     ]
 )
+
+
+def _media_frame(
+    docs: DataFrame,
+    modality: str,
+    mime: str,
+    payloads_of,
+    width: int | None = None,
+    height: int | None = None,
+    duration_ms=None,
+) -> DataFrame:
+    """The MEDIA_SCHEMA frame of a fixture builder: one row per
+    ``doc_id`` (``media_id = doc_id``), payloads from
+    ``payloads_of(ids)`` (an int64 id array -> one payload per id), the
+    given constant modality/mime/geometry, and ``duration_ms(ids)``
+    when given (null otherwise). Built batch by batch in mapInPandas,
+    so payloads are made on the executors."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids = pdf["doc_id"].to_numpy()
+            n = len(ids)
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "modality": modality,
+                    "payload": payloads_of(ids),
+                    "mime": mime,
+                    "width": pd.Series([width] * n, dtype="Int32"),
+                    "height": pd.Series([height] * n, dtype="Int32"),
+                    "duration_ms": pd.Series(
+                        [None] * n if duration_ms is None else duration_ms(ids),
+                        dtype="Int64",
+                    ),
+                }
+            )
+
+    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+
 
 FEATURE_DIM = 16
 
@@ -778,29 +836,10 @@ def media_with_jpeg(docs: DataFrame, width: int = 16, height: int = 16) -> DataF
     Huffman-coded, DCT-quantized payload is still analytically
     oracle-checkable — the decoder's marker walk, Huffman tables,
     zigzag, dequantize, and IDCT all sit on the certified path."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                g = 2 * ((int(d) * 13) % 128)
-                payloads.append(
-                    encode_jpeg(np.full((height, width), g, dtype=np.uint8))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _media_frame(docs, "image", "image/jpeg", lambda ids: [
+        encode_jpeg(np.full((height, width), 2 * ((int(d) * 13) % 128), dtype=np.uint8))
+        for d in ids
+    ])
 
 
 def _decode_features(payload: bytes, mime: str | None) -> list[float]:
@@ -950,6 +989,62 @@ def image_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(batches, schema=_IMAGE_STATS_SCHEMA)
 
 
+def _rewrite_media(
+    df: DataFrame,
+    modality: str,
+    cols: tuple[str, ...],
+    mime: str,
+    rewrite,
+    on_exotic: str = "raise",
+) -> DataFrame:
+    """The payload rewrite behind the resize/resample transforms: every
+    ``modality`` row's payload goes through ``rewrite(payload)``, which
+    returns the new values of ``cols`` (``"payload"`` first, then the
+    metadata it fixes) or None when the payload does not decode. A
+    decoded row gets those values and ``mime``; an undecodable one
+    (null payload included) gets null in every column of ``cols`` —
+    the decode-gate convention: a downstream gate routes it, the batch
+    never crashes. Other rows pass through untouched.
+
+    ``on_exotic`` governs real-but-exotic formats (a decoder's
+    NotImplementedError, e.g. progressive JPEG without Pillow): the
+    default ``'raise'`` keeps the error loud — right for batch jobs,
+    where silently dropping a decodable-in-principle corpus slice is
+    worse than crashing; ``'null'`` treats them as undecodable — the
+    streaming-ingest setting, where one exotic payload must route to
+    the DLQ, not abort the micro-batch (see run_media_pipeline)."""
+    if on_exotic not in ("raise", "null"):
+        raise ValueError(f"on_exotic must be 'raise' or 'null': {on_exotic!r}")
+
+    def one(payload):
+        if payload is None:
+            return None
+        try:
+            return rewrite(bytes(payload))
+        except NotImplementedError:
+            if on_exotic == "null":
+                return None
+            raise
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            pdf = pdf.copy()
+            rows = pdf.index[pdf["modality"] == modality]
+            new = [one(p) for p in pdf.loc[rows, "payload"]]
+            for k, col in enumerate(cols):
+                pdf[col] = pdf[col].astype(object)
+                pdf.loc[rows, col] = pd.Series(
+                    [None if v is None else v[k] for v in new], index=rows, dtype=object
+                )
+            pdf.loc[[r for r, v in zip(rows, new) if v is not None], "mime"] = mime
+            pdf["width"] = pdf["width"].astype("Int32")
+            pdf["height"] = pdf["height"].astype("Int32")
+            pdf["duration_ms"] = pdf["duration_ms"].astype("Int64")
+            yield pdf
+
+    return df.mapInPandas(batches, schema=MEDIA_SCHEMA)
+
+
 def resize_media(
     df: DataFrame, width: int, height: int, on_exotic: str = "raise"
 ) -> DataFrame:
@@ -961,50 +1056,20 @@ def resize_media(
     center-nearest), and re-encodes as lossless P6 PPM with the
     geometry metadata and mime updated. Non-image rows pass through
     untouched; an UNDECODABLE image payload emits payload=None with
-    null geometry (the decode-gate convention: a downstream gate
-    routes it, the batch never crashes).
+    null geometry. ``on_exotic`` is ``_rewrite_media``'s: ``'raise'``
+    (batch default) or ``'null'`` (streaming ingest, see
+    run_media_pipeline)."""
 
-    ``on_exotic`` governs real-but-exotic formats (e.g. progressive
-    JPEG without Pillow): the default ``'raise'`` keeps the
-    dispatcher's loud NotImplementedError — right for batch jobs,
-    where silently dropping a decodable-in-principle corpus slice is
-    worse than crashing; ``'null'`` maps them to payload=None like
-    any undecodable input — the streaming-ingest setting, where one
-    exotic payload must route to the DLQ, not abort the micro-batch
-    (see run_media_pipeline)."""
-    if on_exotic not in ("raise", "null"):
-        raise ValueError(f"on_exotic must be 'raise' or 'null': {on_exotic!r}")
-
-    def _resize(payload) -> bytes | None:
-        if payload is None:
-            return None
-        try:
-            dec = _decode_rgb(bytes(payload))
-        except NotImplementedError:
-            if on_exotic == "null":
-                return None
-            raise
+    def rewrite(payload: bytes):
+        dec = _decode_rgb(payload)
         if dec is None:
             return None
-        _w, _h, px = dec
-        return encode_ppm(resize_rgb(px, width, height))
+        return encode_ppm(resize_rgb(dec[2], width, height)), width, height
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            is_img = pdf["modality"] == "image"
-            pdf.loc[is_img, "payload"] = pdf.loc[is_img, "payload"].map(_resize)
-            ok = is_img & pdf["payload"].notna()
-            pdf.loc[ok, "width"] = width
-            pdf.loc[ok, "height"] = height
-            pdf.loc[ok, "mime"] = "image/x-portable-pixmap"
-            pdf.loc[is_img & ~ok, "width"] = None
-            pdf.loc[is_img & ~ok, "height"] = None
-            pdf["width"] = pdf["width"].astype("Int32")
-            pdf["height"] = pdf["height"].astype("Int32")
-            yield pdf
-
-    return df.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _rewrite_media(
+        df, "image", ("payload", "width", "height"), "image/x-portable-pixmap",
+        rewrite, on_exotic,
+    )
 
 
 def resize_video(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -1020,34 +1085,16 @@ def resize_video(df: DataFrame, width: int, height: int) -> DataFrame:
     if width < 1 or height < 1:
         raise ValueError(f"target geometry must be positive: {width}x{height}")
 
-    def _resize(payload):
-        if payload is None:
+    def rewrite(payload: bytes):
+        dec = _decode_video(payload)
+        if dec is None or not dec[4]:
             return None
-        dec = _decode_video(bytes(payload))
-        if dec is None:
-            return None
-        _w, _h, fn, fd, frames = dec
-        if not frames:
-            return None
-        small = np.stack([resize_rgb(f, width, height) for f in frames])
-        return encode_y4m(small, fps_num=fn, fps_den=fd)
+        small = np.stack([resize_rgb(f, width, height) for f in dec[4]])
+        return encode_y4m(small, fps_num=dec[2], fps_den=dec[3]), width, height
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            is_vid = pdf["modality"] == "video"
-            pdf.loc[is_vid, "payload"] = pdf.loc[is_vid, "payload"].map(_resize)
-            ok = is_vid & pdf["payload"].notna()
-            pdf.loc[ok, "width"] = width
-            pdf.loc[ok, "height"] = height
-            pdf.loc[ok, "mime"] = "video/x-yuv4mpeg"
-            pdf.loc[is_vid & ~ok, "width"] = None
-            pdf.loc[is_vid & ~ok, "height"] = None
-            pdf["width"] = pdf["width"].astype("Int32")
-            pdf["height"] = pdf["height"].astype("Int32")
-            yield pdf
-
-    return df.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _rewrite_media(
+        df, "video", ("payload", "width", "height"), "video/x-yuv4mpeg", rewrite
+    )
 
 
 def resample_video(df: DataFrame, factor: int) -> DataFrame:
@@ -1063,88 +1110,14 @@ def resample_video(df: DataFrame, factor: int) -> DataFrame:
     if factor < 1:
         raise ValueError(f"decimation factor must be >= 1: {factor}")
 
-    def _resample(payload):
-        if payload is None:
-            return None
-        dec = _decode_video(bytes(payload))
-        if dec is None:
-            return None
-        _w, _h, fn, fd, frames = dec
-        kept = frames[::factor]
+    def rewrite(payload: bytes):
+        dec = _decode_video(payload)
+        kept = dec[4][::factor] if dec is not None else []
         if not kept:
             return None
-        return encode_y4m(np.stack(kept), fps_num=fn, fps_den=fd * factor)
+        return (encode_y4m(np.stack(kept), fps_num=dec[2], fps_den=dec[3] * factor),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            is_vid = pdf["modality"] == "video"
-            pdf.loc[is_vid, "payload"] = pdf.loc[is_vid, "payload"].map(_resample)
-            ok = is_vid & pdf["payload"].notna()
-            pdf.loc[ok, "mime"] = "video/x-yuv4mpeg"
-            yield pdf
-
-    return df.mapInPandas(batches, schema=MEDIA_SCHEMA)
-
-
-_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_ts_ms", T.LongType(), False),
-        T.StructField("frame_payload", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 8) -> DataFrame:
-    """Sample frames from video rows: one output row per sampled frame
-    (1-to-N via mapInPandas, the generator shape ffmpeg plumbing
-    needs). Frame decode is stubbed deterministically (slice of the
-    payload keyed by frame index); duration metadata drives the
-    sampling grid, defaulting to one frame when absent.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            vids = pdf[pdf["modality"] == "video"]
-            if len(vids) == 0:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pd.Series([], dtype="int64"),
-                        "frame_idx": pd.Series([], dtype="int32"),
-                        "frame_ts_ms": pd.Series([], dtype="int64"),
-                        "frame_payload": pd.Series([], dtype=object),
-                    }
-                )
-                continue
-            # vectorized 1-to-N fan-out: rows repeat by frame count,
-            # frame_idx = position within each repeat group
-            dur = vids["duration_ms"]
-            n = np.where(
-                dur.isna(), 1, np.minimum(dur.fillna(0).astype("int64") // every_ms + 1, max_frames)
-            ).astype("int64")
-            rep = vids.loc[vids.index.repeat(n)]
-            frame_idx = (np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n)).astype(
-                "int32"
-            )
-            # real impl: ffmpeg seek+decode at frame_ts_ms
-            payloads = [
-                p[i : i + 16] if p else None
-                for p, i in zip(rep["payload"], frame_idx)
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": rep["media_id"].to_numpy(),
-                    "frame_idx": frame_idx,
-                    "frame_ts_ms": frame_idx.astype("int64") * every_ms,
-                    "frame_payload": payloads,
-                }
-            )
-
-    return df.mapInPandas(batches, schema=_FRAMES_SCHEMA)
+    return _rewrite_media(df, "video", ("payload",), "video/x-yuv4mpeg", rewrite)
 
 
 WAV_MAGIC = b"RIFF"
@@ -1262,11 +1235,20 @@ def encode_wav_pcm(
             f"flat length {arr.size} is not a whole number of "
             f"{channels}-channel frames"
         )
-    data = arr.tobytes()
+    return _wav_bytes(arr.tobytes(), sample_rate, channels, bits)
+
+
+def _wav_bytes(
+    data: bytes, sample_rate: int, channels: int = 1, bits: int = 8, fmt_tag: int = 1
+) -> bytes:
+    """RIFF/WAVE container around raw ``data`` bytes: a 16-byte
+    ``fmt `` chunk (``fmt_tag`` 1 = PCM, 6 = A-law, 7 = mu-law) and the
+    ``data`` chunk — the one header writer of encode_wav_pcm and the
+    WAV fixture builders."""
     block = channels * bits // 8
     fmt = (
         b"fmt \x10\x00\x00\x00"
-        + (1).to_bytes(2, "little")
+        + fmt_tag.to_bytes(2, "little")
         + channels.to_bytes(2, "little")
         + sample_rate.to_bytes(4, "little")
         + (sample_rate * block).to_bytes(4, "little")
@@ -1296,46 +1278,26 @@ def resample_audio(df: DataFrame, factor: int, on_exotic: str = "raise") -> Data
     does."""
     if factor < 1:
         raise ValueError(f"decimation factor must be >= 1: {factor}")
-    if on_exotic not in ("raise", "null"):
-        raise ValueError(f"on_exotic must be 'raise' or 'null': {on_exotic!r}")
 
-    def _resample(payload):
-        if payload is None:
-            return None, None
-        try:
-            wav = decode_wav(bytes(payload))
-        except NotImplementedError:
-            if on_exotic == "null":
-                return None, None
-            raise
+    def rewrite(payload: bytes):
+        wav = decode_wav(payload)
         if wav is None:
-            return None, None
+            return None
         rate, ch, _bits, n_frames, arr = wav
         ch = max(ch, 1)
         usable = (n_frames // factor) * factor
         if usable == 0 or rate // factor == 0:
-            return None, None
+            return None
         frames = arr[: usable * ch].reshape(usable, ch)
         sums = frames.astype(np.int64).reshape(usable // factor, factor, ch).sum(axis=1)
-        dec = np.floor(sums.astype(np.float64) / factor + 0.5)
-        out = dec.astype(arr.dtype)
+        out = np.floor(sums.astype(np.float64) / factor + 0.5).astype(arr.dtype)
         new_rate = rate // factor
         dur = (usable // factor) * 1000 // new_rate
         return encode_wav_pcm(out, new_rate, ch), dur
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            is_aud = pdf["modality"] == "audio"
-            pairs = pdf.loc[is_aud, "payload"].map(_resample)
-            pdf.loc[is_aud, "payload"] = pairs.map(lambda t: t[0])
-            pdf.loc[is_aud, "duration_ms"] = pairs.map(lambda t: t[1])
-            ok = is_aud & pdf["payload"].notna()
-            pdf.loc[ok, "mime"] = "audio/wav"
-            pdf["duration_ms"] = pdf["duration_ms"].astype("Int64")
-            yield pdf
-
-    return df.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _rewrite_media(
+        df, "audio", ("payload", "duration_ms"), "audio/wav", rewrite, on_exotic
+    )
 
 
 _AUDIO_STATS_SCHEMA = T.StructType(
@@ -1393,38 +1355,11 @@ def media_with_wav(
     ``(d*11 + i*17) % 256``) — the audio twin of media_with_ppm: the
     oracle predicts decoded stats analytically, proving the RIFF walk
     and sample reinterpretation."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(n_samples, dtype=np.int64)
-        fmt = (
-            b"fmt \x10\x00\x00\x00"  # PCM fmt chunk, 16 bytes
-            + (1).to_bytes(2, "little")  # audio format 1 = PCM
-            + (1).to_bytes(2, "little")  # mono
-            + sample_rate.to_bytes(4, "little")
-            + sample_rate.to_bytes(4, "little")  # byte rate (8-bit mono)
-            + (1).to_bytes(2, "little")  # block align
-            + (8).to_bytes(2, "little")  # bits per sample
-        )
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                data = ((d * 11 + i * 17) % 256).astype(np.uint8).tobytes()
-                body = b"WAVE" + fmt + b"data" + len(data).to_bytes(4, "little") + data
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "audio",
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    i = np.arange(n_samples, dtype=np.int64)
+    return _media_frame(docs, "audio", "audio/wav", lambda ids: [
+        encode_wav_pcm(((d * 11 + i * 17) % 256).astype(np.uint8), sample_rate)
+        for d in ids
+    ])
 
 
 def media_with_wav_g711(
@@ -1439,39 +1374,13 @@ def media_with_wav_g711(
     arithmetic (mulaw_expand / alaw_expand), so the decoded
     statistics have closed forms the DuckDB oracle replays byte for
     byte — the compressed-audio twins of media_with_wav."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(n_samples, dtype=np.int64)
-        fmt = (
-            b"fmt \x10\x00\x00\x00"
-            + fmt_tag.to_bytes(2, "little")  # 7 = mu-law, 6 = A-law
-            + (1).to_bytes(2, "little")  # mono
-            + sample_rate.to_bytes(4, "little")
-            + sample_rate.to_bytes(4, "little")  # byte rate (8-bit mono)
-            + (1).to_bytes(2, "little")  # block align
-            + (8).to_bytes(2, "little")  # bits per code byte
+    i = np.arange(n_samples, dtype=np.int64)
+    return _media_frame(docs, "audio", "audio/basic", lambda ids: [
+        _wav_bytes(
+            ((d * 13 + i * 7) % 256).astype(np.uint8).tobytes(), sample_rate, fmt_tag=fmt_tag
         )
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                data = ((d * 13 + i * 7) % 256).astype(np.uint8).tobytes()
-                body = b"WAVE" + fmt + b"data" + len(data).to_bytes(4, "little") + data
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "audio",
-                    "payload": payloads,
-                    "mime": "audio/basic",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
-
+        for d in ids
+    ])
 
 
 def media_with_ppm(docs: DataFrame, width: int = 4, height: int = 4) -> DataFrame:
@@ -1480,29 +1389,11 @@ def media_with_ppm(docs: DataFrame, width: int = 4, height: int = 4) -> DataFram
     d is ``(d*7 + i*13) % 256``. The closed form lets an independent
     engine (the DuckDB oracle) predict the decoded statistics without
     running the decoder — proving the decode path, not assuming it."""
-    npx = width * height * 3
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = f"P6\n{width} {height}\n255\n".encode()
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            i = np.arange(npx, dtype=np.int64)
-            payloads = [
-                header + ((d * 7 + i * 13) % 256).astype(np.uint8).tobytes() for d in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/x-portable-pixmap",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    i = np.arange(width * height * 3, dtype=np.int64)
+    return _media_frame(docs, "image", "image/x-portable-pixmap", lambda ids: [
+        encode_ppm(((d * 7 + i * 13) % 256).astype(np.uint8).reshape(height, width, 3))
+        for d in ids
+    ])
 
 
 def media_with_png(
@@ -1517,34 +1408,14 @@ def media_with_png(
     analytic oracle predicts the decoded stats WITHOUT a decoder:
     identical to the PPM oracle because the pixel formula is shared —
     a match proves inflate + unfilter reconstruct the exact pixels."""
-    npx = width * height * 3
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(npx, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = [
-                encode_png(
-                    ((d * 7 + i * 13) % 256)
-                    .astype(np.uint8)
-                    .reshape(height, width, 3),
-                    filter_type=(int(d) % 5 if filter_cycle else 0),
-                )
-                for d in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    i = np.arange(width * height * 3, dtype=np.int64)
+    return _media_frame(docs, "image", "image/png", lambda ids: [
+        encode_png(
+            ((d * 7 + i * 13) % 256).astype(np.uint8).reshape(height, width, 3),
+            filter_type=(int(d) % 5 if filter_cycle else 0),
+        )
+        for d in ids
+    ])
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
@@ -1568,6 +1439,13 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
 # --- image near-duplicate detection (dHash) ---------------------------
 
 
+def _pack64(flags) -> int:
+    """Pack bools (bit 0 first) into a SIGNED 64-bit int (Spark
+    LongType) — the bit packing of every 64-bit fingerprint here."""
+    v = sum(1 << i for i, f in enumerate(flags) if f)
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
 def _dhash_bits(g: np.ndarray) -> int:
     """dHash bit packing over a 2-D gray array — the ONE copy of the
     block-grid comparison shared by the image (channel-mean gray) and
@@ -1575,20 +1453,11 @@ def _dhash_bits(g: np.ndarray) -> int:
     8x9 block grid (np.array_split — deterministic, no resampling
     library), one bit per horizontal neighbor comparison, packed
     row-major into a SIGNED 64-bit int (Spark LongType)."""
-    rows = np.array_split(g, 8, axis=0)
-    bits_val = 0
-    i = 0
-    for r in rows:
-        cols = [
-            (c.mean() if c.size else 0.0) for c in np.array_split(r, 9, axis=1)
-        ]
-        for a, b in zip(cols[:-1], cols[1:]):
-            if b > a:
-                bits_val |= 1 << i
-            i += 1
-    if bits_val >= 1 << 63:
-        bits_val -= 1 << 64
-    return bits_val
+    flags = []
+    for r in np.array_split(g, 8, axis=0):
+        cols = [(c.mean() if c.size else 0.0) for c in np.array_split(r, 9, axis=1)]
+        flags += [b > a for a, b in zip(cols[:-1], cols[1:])]
+    return _pack64(flags)
 
 
 def dhash64(px: np.ndarray) -> int:
@@ -1626,26 +1495,7 @@ def image_dhash(df: DataFrame) -> DataFrame:
     mapInPandas pass, fused into the scan. Non-decodable payloads
     drop out (inner dedup semantics: you can only compare what you
     can see)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                dec = _decode_rgb(p) if p is not None else None
-                if dec is None:
-                    continue
-                _, _, px = dec
-                ids.append(mid)
-                hashes.append(dhash64(px))
-            yield pd.DataFrame({"media_id": ids, "dhash": pd.Series(hashes, dtype="int64")})
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("dhash", T.LongType()),
-        ]
-    )
-    return df.select("media_id", "payload").mapInPandas(batches, schema)
+    return _fingerprints(df, "dhash", "image")
 
 
 def hash_band_rows(
@@ -1812,34 +1662,19 @@ def media_with_ppm_groups(
     distance apart; cross-group pairs are far. Deterministic closed
     form, so the rows-only catalog certificate is reproducible."""
     npx = width * height * 3
+    i = np.arange(npx, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = f"P6\n{width} {height}\n255\n".encode()
-        i = np.arange(npx, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                g, m = int(d) // group_size, int(d) % group_size
-                px = (g * 37 + 3 * i * i + 11 * i) % 256
-                if m:
-                    lo = (m * 61) % (npx - 12)
-                    px = px.copy()
-                    px[lo : lo + 12] = 255 - px[lo : lo + 12]
-                payloads.append(header + px.astype(np.uint8).tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/x-portable-pixmap",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
+    def payload(d: int) -> bytes:
+        g, m = d // group_size, d % group_size
+        px = (g * 37 + 3 * i * i + 11 * i) % 256
+        if m:
+            lo = (m * 61) % (npx - 12)
+            px[lo : lo + 12] = 255 - px[lo : lo + 12]
+        return encode_ppm(px.astype(np.uint8).reshape(height, width, 3))
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _media_frame(
+        docs, "image", "image/x-portable-pixmap", lambda ids: [payload(int(d)) for d in ids]
+    )
 
 
 def audio_fingerprint64(samples: np.ndarray, n_windows: int = 9, n_bands: int = 8) -> int:
@@ -1864,16 +1699,9 @@ def audio_fingerprint64(samples: np.ndarray, n_windows: int = 9, n_bands: int = 
         ]
         energies.append(bands)
     E = np.asarray(energies)  # (n_windows, n_bands)
-    bits_val = 0
-    i = 0
-    for wi in range(1, n_windows):
-        for bi in range(n_bands):
-            if E[wi, bi] > E[wi - 1, bi]:
-                bits_val |= 1 << i
-            i += 1
-    if bits_val >= 1 << 63:
-        bits_val -= 1 << 64
-    return bits_val
+    return _pack64(
+        E[wi, bi] > E[wi - 1, bi] for wi in range(1, n_windows) for bi in range(n_bands)
+    )
 
 
 # Shared trig tables of the N=16 DFT twin: the 16 distinct values of
@@ -1933,16 +1761,11 @@ def audio_dft_fingerprint64(
                 im += v * DFT_SIN_16[(k * n) % 16]
             row.append(round(re * re + im * im, 6))
         energies.append(row)
-    bits_val = 0
-    i = 0
-    for wi in range(1, n_windows):
-        for bi in range(8):
-            if energies[wi][bi] > energies[wi - 1][bi]:
-                bits_val |= 1 << i
-            i += 1
-    if bits_val >= 1 << 63:
-        bits_val -= 1 << 64
-    return bits_val
+    return _pack64(
+        energies[wi][bi] > energies[wi - 1][bi]
+        for wi in range(1, n_windows)
+        for bi in range(8)
+    )
 
 
 def _wav_mono(wav: tuple) -> np.ndarray | None:
@@ -1961,26 +1784,7 @@ def audio_hash(df: DataFrame) -> DataFrame:
     """X5/X2 — per-clip fingerprint column ``(media_id, afp)``: WAV
     decode (channel-mean mono mix) + spectral fingerprint in one
     mapInPandas pass. Non-decodable payloads drop out."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, prints = [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                wav = decode_wav(p) if p is not None else None
-                mono = _wav_mono(wav) if wav is not None else None
-                if mono is None:
-                    continue
-                ids.append(mid)
-                prints.append(audio_fingerprint64(mono))
-            yield pd.DataFrame({"media_id": ids, "afp": pd.Series(prints, dtype="int64")})
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("afp", T.LongType()),
-        ]
-    )
-    return df.select("media_id", "payload").mapInPandas(batches, schema)
+    return _fingerprints(df, "afp", "audio")
 
 
 def audio_near_dup(
@@ -2000,26 +1804,7 @@ def audio_hash_dft(df: DataFrame) -> DataFrame:
     channel-mean mono mix, fingerprinted by audio_dft_fingerprint64
     (explicit N=16 DFT sums, oracle-replayable) instead of the rFFT
     path. Same (media_id, afp) contract."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, prints = [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                wav = decode_wav(p) if p is not None else None
-                mono = _wav_mono(wav) if wav is not None else None
-                if mono is None:
-                    continue
-                ids.append(mid)
-                prints.append(audio_dft_fingerprint64(mono))
-            yield pd.DataFrame({"media_id": ids, "afp": pd.Series(prints, dtype="int64")})
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("afp", T.LongType()),
-        ]
-    )
-    return df.select("media_id", "payload").mapInPandas(batches, schema)
+    return _fingerprints(df, "afp", "audio", audio_dft_fingerprint64)
 
 
 def audio_near_dup_dft(
@@ -2049,48 +1834,20 @@ def media_with_wav_groups(
     component frequencies derive from the group id; each member adds
     a small extra tone — few fingerprint bits move within a group,
     many across groups. Deterministic closed form (8-bit mono PCM)."""
+    i = np.arange(n_samples, dtype=np.float64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(n_samples, dtype=np.float64)
-        fmt = (
-            b"fmt \x10\x00\x00\x00"
-            + (1).to_bytes(2, "little")
-            + (1).to_bytes(2, "little")
-            + sample_rate.to_bytes(4, "little")
-            + sample_rate.to_bytes(4, "little")
-            + (1).to_bytes(2, "little")
-            + (8).to_bytes(2, "little")
+    def payload(d: int) -> bytes:
+        g, m = d // group_size, d % group_size
+        base = (
+            np.sin(2 * np.pi * (g % 7 + 2) * i / 64.0)
+            + 0.5 * np.sin(2 * np.pi * (g % 11 + 13) * i / 64.0)
         )
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                g, m = int(d) // group_size, int(d) % group_size
-                base = (
-                    np.sin(2 * np.pi * (g % 7 + 2) * i / 64.0)
-                    + 0.5 * np.sin(2 * np.pi * (g % 11 + 13) * i / 64.0)
-                )
-                if m:
-                    base = base + 0.15 * np.sin(2 * np.pi * (m + 29) * i / 64.0)
-                data = (127.5 + 100.0 * base / np.abs(base).max()).astype(np.uint8)
-                body = (
-                    b"WAVE" + fmt + b"data"
-                    + len(data).to_bytes(4, "little") + data.tobytes()
-                )
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "audio",
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
+        if m:
+            base = base + 0.15 * np.sin(2 * np.pi * (m + 29) * i / 64.0)
+        data = (127.5 + 100.0 * base / np.abs(base).max()).astype(np.uint8)
+        return encode_wav_pcm(data, sample_rate)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _media_frame(docs, "audio", "audio/wav", lambda ids: [payload(int(d)) for d in ids])
 
 
 def video_hash(df: DataFrame) -> DataFrame:
@@ -2098,25 +1855,7 @@ def video_hash(df: DataFrame) -> DataFrame:
     decode (Y4M / MJPEG-AVI via the codec dispatch) + temporal-mean
     dHash in one mapInPandas pass. Non-decodable or zero-frame
     payloads drop out (inner dedup semantics)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, prints = [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                dec = _decode_video(bytes(p)) if p is not None else None
-                if dec is None or not dec[4]:
-                    continue
-                ids.append(mid)
-                prints.append(video_fingerprint64(dec[4]))
-            yield pd.DataFrame({"media_id": ids, "vfp": pd.Series(prints, dtype="int64")})
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("vfp", T.LongType()),
-        ]
-    )
-    return df.select("media_id", "payload").mapInPandas(batches, schema)
+    return _fingerprints(df, "vfp", "video")
 
 
 def video_near_dup(
@@ -2154,37 +1893,24 @@ def media_with_y4m_groups(
     Real YUV4MPEG2 payloads (encode_y4m), deterministic closed
     form."""
     wh = width * height
+    p = np.arange(wh, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = np.arange(wh, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                g, m = int(d) // group_size, int(d) % group_size
-                frames = []
-                for f in range(n_frames):
-                    h = g * 2654435761 + (f * wh + p) * 2246822519 + 99991
-                    v = (h ^ (h >> 9) ^ (h >> 17)) % 256
-                    if m and f == 1:
-                        lo = (m * 61) % (wh - 12)
-                        v = v.copy()
-                        v[lo : lo + 12] = 255 - v[lo : lo + 12]
-                    frames.append(v.reshape(height, width).astype(np.uint8))
-                payloads.append(encode_y4m(np.stack(frames)))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "video",
-                    "payload": payloads,
-                    "mime": "video/x-yuv4mpeg",
-                    "width": pd.Series([width] * len(ids), dtype="Int32"),
-                    "height": pd.Series([height] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
+    def payload(d: int) -> bytes:
+        g, m = d // group_size, d % group_size
+        frames = []
+        for f in range(n_frames):
+            h = g * 2654435761 + (f * wh + p) * 2246822519 + 99991
+            v = (h ^ (h >> 9) ^ (h >> 17)) % 256
+            if m and f == 1:
+                lo = (m * 61) % (wh - 12)
+                v[lo : lo + 12] = 255 - v[lo : lo + 12]
+            frames.append(v.reshape(height, width).astype(np.uint8))
+        return encode_y4m(np.stack(frames))
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _media_frame(
+        docs, "video", "video/x-yuv4mpeg", lambda ids: [payload(int(d)) for d in ids],
+        width=width, height=height,
+    )
 
 
 def media_with_wav_dft_groups(
@@ -2207,47 +1933,17 @@ def media_with_wav_dft_groups(
     transitions 3->4 and 4->5 — bands 0 and 3 always shared, the
     banded join finds every within-group pair — while cross-group
     prints are ~32 bits apart. 8-bit mono PCM, closed form, exact."""
+    j = np.arange(n_samples, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        j = np.arange(n_samples, dtype=np.int64)
-        fmt = (
-            b"fmt \x10\x00\x00\x00"
-            + (1).to_bytes(2, "little")
-            + (1).to_bytes(2, "little")
-            + sample_rate.to_bytes(4, "little")
-            + sample_rate.to_bytes(4, "little")
-            + (1).to_bytes(2, "little")
-            + (8).to_bytes(2, "little")
-        )
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                g, m = int(d) // group_size, int(d) % group_size
-                h = g * 2654435761 + j * 2246822519 + 12345
-                v = (h ^ (h >> 9) ^ (h >> 17)) % 256
-                if m:
-                    pert = (v + m * (7 + 3 * j)) % 256
-                    v = np.where((j >= 64) & (j < 80), pert, v)
-                data = v.astype(np.uint8)
-                body = (
-                    b"WAVE" + fmt + b"data"
-                    + len(data).to_bytes(4, "little") + data.tobytes()
-                )
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "audio",
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
+    def payload(d: int) -> bytes:
+        g, m = d // group_size, d % group_size
+        h = g * 2654435761 + j * 2246822519 + 12345
+        v = (h ^ (h >> 9) ^ (h >> 17)) % 256
+        if m:
+            v = np.where((j >= 64) & (j < 80), (v + m * (7 + 3 * j)) % 256, v)
+        return encode_wav_pcm(v.astype(np.uint8), sample_rate)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _media_frame(docs, "audio", "audio/wav", lambda ids: [payload(int(d)) for d in ids])
 
 
 # --------------------------------------------------------------------
@@ -2499,34 +2195,16 @@ def media_with_mjpeg(
     statistic has a closed form the DuckDB oracle predicts without a
     decoder. The compressed twin of media_with_y4m."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for d in ids:
-                n = 1 + int(d) % 4
-                frames = [
-                    np.full(
-                        (height, width),
-                        2 * ((int(d) * 17 + f * 29) % 128),
-                        dtype=np.uint8,
-                    )
-                    for f in range(n)
-                ]
-                payloads.append(encode_mjpeg_avi(frames, fps_num=fps_num))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "video",
-                    "payload": payloads,
-                    "mime": "video/x-msvideo",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
+    def payload(d: int) -> bytes:
+        frames = [
+            np.full((height, width), 2 * ((d * 17 + f * 29) % 128), dtype=np.uint8)
+            for f in range(1 + d % 4)
+        ]
+        return encode_mjpeg_avi(frames, fps_num=fps_num)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _media_frame(
+        docs, "video", "video/x-msvideo", lambda ids: [payload(int(d)) for d in ids]
+    )
 
 
 def media_with_wav_mulaw(docs, n_samples: int = 64, sample_rate: int = 8000):
@@ -2693,8 +2371,7 @@ def frame_luma_stats(
     path, same seam as video_stats / frame_diff_keyframes), pick the
     frame under each ``every_ms`` grid point (frame_idx =
     ts*fps//1000, integer arithmetic — engine-replayable), cap at
-    ``max_frames``, emit per-frame luma means. This is the genuine
-    form of the sample_frames plumbing stub: 1-to-N fan-out with
+    ``max_frames``, emit per-frame luma means: 1-to-N fan-out with
     decoded content."""
     decoder = _video_decoder(decode)
 
@@ -2791,50 +2468,84 @@ def media_with_y4m(
     frame f is ``(d*31 + f*7 + p*p) % 256``. The closed form lets the
     DuckDB oracle predict every decoded statistic without a decoder —
     same proof pattern as the PPM/PNG/WAV fixtures."""
-    npx = width * height
+    p = np.arange(width * height, dtype=np.int64)
+
+    def payload(d: int) -> bytes:
+        frames = [
+            ((d * 31 + f * 7 + p * p) % 256).astype(np.uint8).reshape(height, width)
+            for f in range(1 + d % 4)
+        ]
+        return encode_y4m(np.stack(frames), fps_num=fps_num)
+
+    return _media_frame(
+        docs, "video", "video/x-yuv4mpeg", lambda ids: [payload(int(d)) for d in ids],
+        duration_ms=lambda ids: [(1 + int(d) % 4) * 1000 // fps_num for d in ids],
+    )
+
+
+def _image_pixels(payload: bytes) -> np.ndarray | None:
+    dec = _decode_rgb(payload)
+    return None if dec is None else dec[2]
+
+
+def _audio_mono(payload: bytes) -> np.ndarray | None:
+    wav = decode_wav(payload)
+    return None if wav is None else _wav_mono(wav)
+
+
+def _video_frames(payload: bytes) -> list[np.ndarray] | None:
+    dec = _decode_video(payload)
+    return None if dec is None else dec[4]
+
+
+# modality -> (decode, fingerprint): the ONE dispatch of the decode gate
+# and the per-modality hash ops. decode maps a payload to what the
+# fingerprint reads, or None when it does not decode; the fingerprint
+# gives None when there is nothing to fingerprint (a zero-frame video).
+_MODALITIES = {
+    "image": (_image_pixels, dhash64),
+    "audio": (_audio_mono, audio_fingerprint64),
+    "video": (_video_frames, lambda frames: video_fingerprint64(frames) if frames else None),
+}
+
+
+def _fingerprints(
+    df: DataFrame, col: str, modality: str, fingerprint=None
+) -> DataFrame:
+    """``(media_id, <col>)`` for every row whose payload decodes as
+    ``modality`` (the modality column is not read) and has a
+    fingerprint: the core of image_dhash / audio_hash / audio_hash_dft
+    / video_hash. Other rows drop out (inner dedup semantics); decoder
+    errors raise. ``fingerprint`` replaces the table's (the DFT twin)."""
+    decode, default = _MODALITIES[modality]
+    fingerprint = fingerprint or default
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = np.arange(npx, dtype=np.int64)
         for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            durs = []
-            for d in ids:
-                n = 1 + int(d) % 4
-                frames = np.stack(
-                    [
-                        ((int(d) * 31 + f * 7 + p * p) % 256)
-                        .astype(np.uint8)
-                        .reshape(height, width)
-                        for f in range(n)
-                    ]
-                )
-                payloads.append(encode_y4m(frames, fps_num=fps_num))
-                durs.append(n * 1000 // fps_num)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "video",
-                    "payload": payloads,
-                    "mime": "video/x-yuv4mpeg",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series(durs, dtype="Int64"),
-                }
-            )
+            ids, prints = [], []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                content = decode(bytes(p)) if p is not None else None
+                fp = fingerprint(content) if content is not None else None
+                if fp is not None:
+                    ids.append(mid)
+                    prints.append(fp)
+            yield pd.DataFrame({"media_id": ids, col: pd.Series(prints, dtype="int64")})
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    schema = T.StructType(
+        [T.StructField("media_id", T.LongType()), T.StructField(col, T.LongType())]
+    )
+    return df.select("media_id", "payload").mapInPandas(batches, schema)
 
 
 def media_gate_hash(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """X5 — modality-aware decode gate + perceptual hash in ONE Arrow
-    pass: images decode (PPM/PNG stdlib, Pillow-gated rest) to a
-    dHash; audio decodes (PCM WAV) to the spectral fingerprint; video
+    pass, through the same ``_MODALITIES`` table as the hash ops:
+    images decode (PPM/PNG/JPEG stdlib, Pillow-gated rest) to a dHash;
+    audio decodes (PCM/G.711 WAV) to the spectral fingerprint; video
     decodes (Y4M / MJPEG-AVI) to the temporal-mean dHash
-    (video_fingerprint64 — frame-level fingerprints landed in r11,
-    closing the documented extension); any other modality or
-    undecodable payload fails the gate. Output: ``(media_id,
-    decode_ok, dhash nullable, *carry)``.
+    (video_fingerprint64) — a zero-frame video passes the gate with a
+    null hash; any other modality or undecodable payload fails the
+    gate. Output: ``(media_id, decode_ok, dhash nullable, *carry)``.
 
     ``carry`` names input columns to pass through the Arrow boundary
     untouched (r14): a caller that needs gate output NEXT TO cheap
@@ -2851,43 +2562,31 @@ def media_gate_hash(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     content-type-agnostic claim requires the gate to dispatch on the
     modality column."""
 
+    def gate(modality: str, payload) -> tuple[bool, int | None]:
+        if payload is None or modality not in _MODALITIES:
+            return False, None
+        decode, fingerprint = _MODALITIES[modality]
+        # A decoder EXCEPTION is a failed gate, never a failed batch: a
+        # malformed-but-magic-valid payload (odd-length PCM data,
+        # zero-channel fmt chunk, garbage Y4M header numbers, truncated
+        # PPM raster) must dead-letter like any undecodable row — a
+        # raised error here poisons the micro-batch and the checkpoint
+        # replays it forever.
+        try:
+            content = decode(bytes(payload))
+            if content is None:
+                return False, None
+            return True, fingerprint(content)
+        except Exception:
+            return False, None
+
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            ids, oks, hashes = [], [], []
-            for mid, mod, p in zip(pdf["media_id"], pdf["modality"], pdf["payload"]):
-                ok, ph = False, None
-                # A decoder EXCEPTION is a failed gate, never a failed
-                # batch: a malformed-but-magic-valid payload (odd-length
-                # PCM data, zero-channel fmt chunk, garbage Y4M header
-                # numbers) must dead-letter like any undecodable row —
-                # a raised error here poisons the micro-batch and the
-                # checkpoint replays it forever.
-                try:
-                    if p is not None:
-                        if mod == "image":
-                            dec = _decode_rgb(p)
-                            if dec is not None:
-                                ok, ph = True, dhash64(dec[2])
-                        elif mod == "audio":
-                            wav = decode_wav(p)
-                            mono = _wav_mono(wav) if wav is not None else None
-                            if mono is not None:
-                                ok, ph = True, audio_fingerprint64(mono)
-                        elif mod == "video":
-                            dec = _decode_video(p)
-                            if dec is not None:
-                                ok = True
-                                if dec[4]:
-                                    ph = video_fingerprint64(dec[4])
-                except Exception:
-                    ok, ph = False, None
-                ids.append(mid)
-                oks.append(ok)
-                hashes.append(ph)
+            res = [gate(m, p) for m, p in zip(pdf["modality"], pdf["payload"])]
             out = {
-                "media_id": ids,
-                "decode_ok": oks,
-                "dhash": pd.Series(hashes, dtype="Int64"),
+                "media_id": pdf["media_id"],
+                "decode_ok": [ok for ok, _ in res],
+                "dhash": pd.Series([h for _, h in res], dtype="Int64"),
             }
             for c in carry:
                 out[c] = pdf[c]
@@ -2969,52 +2668,37 @@ def media_routing_fixture(
 
     idx_left, idx_cell = _cell_idx(col_left), _cell_idx(col_cell)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = f"P6\n{width} {height}\n255\n".encode()
-        i = np.arange(npx, dtype=np.uint64)
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            # Whole-batch pixel generation (r15, guide §4.2): one 2D
-            # splitmix64 over (rows x npx) seeds replaces the per-row
-            # Python loop — identical bytes (splitmix is elementwise;
-            # the m==2 cell means are exact integer sums in float64,
-            # so the flip decisions are order-free).
-            g_arr = (ids.astype(np.int64) // 4).astype(np.uint64)
-            m_arr = ids.astype(np.int64) % 4
-            seeds = (g_arr * np.uint64(npx))[:, None] + i[None, :]
-            px2d = (
-                (_splitmix64(seeds) >> np.uint64(32)) & np.uint64(0xFF)
-            ).astype(np.uint8)
-            near_rows = np.flatnonzero(m_arr == 2)
-            if len(near_rows):
-                # flip base bit 27 (cell(3,3) vs cell(3,4)) by
-                # clamping the cell to the opposing extreme
-                bit = (
-                    px2d[near_rows][:, idx_cell].mean(axis=1)
-                    > px2d[near_rows][:, idx_left].mean(axis=1)
-                )
-                px2d[near_rows[:, None], idx_cell[None, :]] = np.where(
-                    bit, 0, 255
-                ).astype(np.uint8)[:, None]
-            payloads = []
-            for r, m in enumerate(m_arr):
-                body = px2d[r].tobytes()
-                if m == 3:
-                    body = body[: npx // 2]  # mid-raster truncation
-                payloads.append(header + body)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "modality": "image",
-                    "payload": payloads,
-                    "mime": "image/x-portable-pixmap",
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                    "duration_ms": pd.Series([None] * len(ids), dtype="Int64"),
-                }
-            )
+    header = f"P6\n{width} {height}\n255\n".encode()
+    i = np.arange(npx, dtype=np.uint64)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    def payloads_of(ids: np.ndarray) -> list[bytes]:
+        # Whole-batch pixel generation (r15, guide §4.2): one 2D
+        # splitmix64 over (rows x npx) seeds replaces the per-row
+        # Python loop — identical bytes (splitmix is elementwise;
+        # the m==2 cell means are exact integer sums in float64,
+        # so the flip decisions are order-free).
+        g_arr = (ids.astype(np.int64) // 4).astype(np.uint64)
+        m_arr = ids.astype(np.int64) % 4
+        seeds = (g_arr * np.uint64(npx))[:, None] + i[None, :]
+        px2d = ((_splitmix64(seeds) >> np.uint64(32)) & np.uint64(0xFF)).astype(np.uint8)
+        near_rows = np.flatnonzero(m_arr == 2)
+        if len(near_rows):
+            # flip base bit 27 (cell(3,3) vs cell(3,4)) by
+            # clamping the cell to the opposing extreme
+            bit = (
+                px2d[near_rows][:, idx_cell].mean(axis=1)
+                > px2d[near_rows][:, idx_left].mean(axis=1)
+            )
+            px2d[near_rows[:, None], idx_cell[None, :]] = np.where(
+                bit, 0, 255
+            ).astype(np.uint8)[:, None]
+        # m == 3: mid-raster truncation
+        return [
+            header + px2d[r].tobytes()[: npx // 2 if m == 3 else npx]
+            for r, m in enumerate(m_arr)
+        ]
+
+    return _media_frame(docs, "image", "image/x-portable-pixmap", payloads_of)
 
 
 def media_ingest_report(

@@ -145,7 +145,7 @@ def normalize_ecs(df: DataFrame) -> DataFrame:
 def normalize_eks(df: DataFrame) -> DataFrame:
     """Fluent Bit pod logs (S3) -> unified rows; kubernetes metadata
     flattens into attrs."""
-    ts = F.to_timestamp("time")
+    ts = F.try_to_timestamp(F.col("time"))
     attrs = F.create_map(
         F.lit("namespace"), F.col("kubernetes.namespace_name"),
         F.lit("pod"), F.col("kubernetes.pod_name"),
@@ -172,7 +172,7 @@ def normalize_lambda(df: DataFrame) -> DataFrame:
         ),
         lambda _, v: v.isNotNull(),
     )
-    ts = F.coalesce(F.col("log_ts"), F.to_timestamp("event_time"))
+    ts = F.coalesce(F.col("log_ts"), F.try_to_timestamp(F.col("event_time")))
     # console.log records end with a newline (reference README.md:119);
     # the unified message column is search-friendly, _raw keeps bytes
     message = F.regexp_replace(F.col("log_message"), r"\s+$", "")
